@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import math
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -15,23 +18,43 @@ def words_col(text_col: str) -> Column:
     return F.split(F.trim(F.col(text_col)), r"\s+")
 
 
+def double_sql(x: float) -> str:
+    """Exact SQL text of one double: ``repr`` is the shortest decimal
+    that parses back to the same IEEE value, and the ``D`` suffix makes
+    Spark read it as a DOUBLE (a bare ``0.5`` is a DECIMAL). NaN and
+    the infinities have no literal form, so they go through a cast."""
+    x = float(x)
+    if math.isfinite(x):
+        return f"{x!r}D"
+    return f"CAST('{x!r}' AS DOUBLE)"
+
+
+def double_array_sql(values: Sequence) -> str:
+    """A (nested) list of floats as ONE ``array(array(...), ...)`` SQL
+    literal, every element exact (see ``double_sql``). Constant
+    matrices (LSH hyperplanes, centroids, codebooks, projections) go
+    into plans this way: the text crosses to the JVM in one call,
+    where every per-element ``F.lit`` costs at least one py4j round
+    trip."""
+    return "array(" + ", ".join(
+        double_array_sql(v) if isinstance(v, (list, tuple)) else double_sql(v)
+        for v in values
+    ) + ")"
+
+
 def explode_bands(df: DataFrame, id_col: str, band_cols: list[str]) -> DataFrame:
     """(id, band_no, bh) rows from one row per id with N band/bucket
     columns — the shared candidate-generation shape for every LSH
     operator (MinHash bands, hyperplane buckets): candidates then meet
     by equality on the composite (band_no, bh) key, one join instead
     of one join per band."""
-    bands = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(i).alias("band_no"), F.col(c).alias("bh"))
-                for i, c in enumerate(band_cols)
-            ]
-        )
-    ).alias("bb")
-    return df.select(F.col(id_col).alias("_id"), bands).select(
-        F.col("_id").alias(id_col), "bb.band_no", "bb.bh"
+    bands = ", ".join(
+        f"named_struct('band_no', {i}, 'bh', `{c}`)"
+        for i, c in enumerate(band_cols)
     )
+    return df.selectExpr(
+        f"`{id_col}` AS _id", f"explode(array({bands})) AS bb"
+    ).selectExpr(f"_id AS `{id_col}`", "bb.band_no", "bb.bh")
 
 
 def banded_self_pairs(
@@ -79,42 +102,42 @@ def banded_self_pairs(
             .distinct()
         )
     buckets = banded.groupBy("band_no", "bh").agg(
-        F.array_sort(F.collect_set(id_col)).alias("ids")
+        F.expr(f"array_sort(collect_set(`{id_col}`)) AS ids")
     )
     return (
         buckets.select(
-            F.explode(sorted_pairs_expr(F.col("ids"), max_bucket)).alias("p")
+            F.explode(sorted_pairs_expr("ids", max_bucket)).alias("p")
         )
-        .select(F.col("p.a").alias("a_id"), F.col("p.b").alias("b_id"))
+        .selectExpr("p.a AS a_id", "p.b AS b_id")
         .distinct()
     )
 
 
-def sorted_pairs_expr(ids: Column, max_size: int | None) -> Column:
-    """array<struct<a,b>> of i<j pairs from a SORTED id array — all
-    combinations for arrays within ``max_size``, else the star pattern
-    (every member paired with the minimum id), which keeps a duplicate
-    cluster connected at linear instead of quadratic cost. Pure array
-    expressions: JVM-side, codegen, no join. Shared by the LSH bucket
-    pair generation and the inverted-index (shingle-group) pair
-    generation. The ``when`` picks the generator per array, so the
-    quadratic branch is never evaluated for oversized arrays."""
-    allpairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    star = F.transform(
-        F.slice(ids, 2, F.size(ids)),
-        lambda y: F.struct(ids[0].alias("a"), y.alias("b")),
+def sorted_pairs_expr(ids: str, max_size: int | None) -> Column:
+    """array<struct<a,b>> of i<j pairs from the SORTED id array in
+    column ``ids`` — all combinations for arrays within ``max_size``,
+    else the star pattern (every member paired with the minimum id),
+    which keeps a duplicate cluster connected at linear instead of
+    quadratic cost. Pure array expressions: JVM-side, codegen, no
+    join. Shared by the LSH bucket pair generation and the
+    inverted-index (shingle-group) pair generation. The ``CASE`` picks
+    the generator per array, so the quadratic branch is never
+    evaluated for oversized arrays."""
+    c = f"`{ids}`"
+    allpairs = (
+        f"flatten(transform({c}, (x, i) -> transform("
+        f"slice({c}, i + 2, size({c})), y -> named_struct('a', x, 'b', y))))"
     )
     if max_size is None:
-        return allpairs
-    return F.when(F.size(ids) <= max_size, allpairs).otherwise(star)
+        return F.expr(allpairs)
+    star = (
+        f"transform(slice({c}, 2, size({c})), "
+        f"y -> named_struct('a', {c}[0], 'b', y))"
+    )
+    return F.expr(
+        f"CASE WHEN size({c}) <= {int(max_size)} THEN {allpairs} "
+        f"ELSE {star} END"
+    )
 
 
 # Row-count ceiling under which a KNOWN-small frame may carry an

@@ -245,9 +245,9 @@ def jaccard_pairs(
     at the cap default that changes nothing at test scale.
 
     The grouped shingle table feeds two branches (pair arrays +
-    per-doc sizes); one internal persist (MLlib-style — the
-    ContextCleaner reclaims it when the result DataFrame is garbage
-    collected; at 100 TB this becomes a checkpoint to storage)."""
+    per-doc sizes); one internal persist (a SQL cache entry: it stays
+    until unpersisted — the ContextCleaner does not reclaim it; at
+    100 TB this becomes a checkpoint to storage)."""
     from lynx_spark.operators._util import sorted_pairs_expr
 
     grouped = _grouped_shingles(
@@ -274,7 +274,7 @@ def jaccard_pairs(
         # of rows
         pair_stream = (
             grouped.filter(F.size("docs") >= 2)
-            .select(F.explode(sorted_pairs_expr(F.col("docs"), None)).alias("p"))
+            .select(F.explode(sorted_pairs_expr("docs", None)).alias("p"))
             .select(F.col("p.a").alias("a_id"), F.col("p.b").alias("b_id"))
         )
     common = pair_stream.groupBy("a_id", "b_id").agg(
@@ -326,7 +326,7 @@ def containment_pairs(
     sh = _exploded_shingles(grouped)
     pair_stream = (
         grouped.filter(F.size("docs") >= 2)
-        .select(F.explode(sorted_pairs_expr(F.col("docs"), None)).alias("p"))
+        .select(F.explode(sorted_pairs_expr("docs", None)).alias("p"))
         .select(F.col("p.a").alias("a_id"), F.col("p.b").alias("b_id"))
     )
     common = pair_stream.groupBy("a_id", "b_id").agg(
@@ -418,7 +418,7 @@ def prefix_filter_pairs(
     self-equi-join for candidates; verification by array_intersect on
     the two candidates' shingle sets — candidate pairs only, never
     all pairs. The shingle table feeds four consumers, hence the one
-    internal persist (ContextCleaner-reclaimed; a checkpoint at
+    internal persist (kept until unpersisted; a checkpoint at
     100 TB)."""
     sh = shingle_table(df, id_col, text_col, n).persist()
     # no eager count (r15): the pfx materialization below is the first

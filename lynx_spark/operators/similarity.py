@@ -20,9 +20,19 @@ Two tiers:
 The hyperplanes are generated from a fixed seed and embedded as
 literals so the identical computation runs in the DuckDB oracle.
 
-Internal persists (bucketed vectors) follow the MLlib pattern: the
-cache is dropped by the ContextCleaner once the returned DataFrame is
-garbage collected; long-lived sessions issuing many calls should
+Constant matrices (hyperplanes, centroids, codebooks, the JL rows)
+and the hot kNN-graph expressions are Spark SQL text, prepared once at
+import where they are constant: every Column-API call is at least one
+py4j round trip, so the 16×64 planes literal spelled out with 1,024
+``F.lit`` calls made building a kNN-graph plan ~6,500 round trips; as
+text it is ~200.
+
+Internal persists (bucketed vectors, scored kNN edges) are SQL cache
+entries, and the ContextCleaner does NOT reclaim those: an entry stays
+until ``unpersist`` (or ``spark.catalog.clearCache()``), whether or
+not the returned DataFrame is still referenced. A repeated identical
+call reuses the entry through plan matching instead of adding one;
+long-lived sessions issuing many different calls should
 ``spark.catalog.clearCache()`` between unrelated pipelines (bench.py
 does).
 """
@@ -36,6 +46,7 @@ from pyspark.sql import functions as F
 
 from lynx_spark.operators._util import (
     banded_self_pairs,
+    double_array_sql,
     ensure_parallelism,
     explode_bands,
 )
@@ -68,6 +79,15 @@ def norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
+def _dot_sql(a: str, b: str) -> str:
+    """``dot`` as SQL text: the same product and left fold, from a
+    DOUBLE zero (``0D``; a bare ``0.0`` would be a DECIMAL)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, "
+        "(acc, x) -> acc + x)"
+    )
+
+
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
@@ -89,9 +109,23 @@ def bucket_expr(vec: Column, table: int = 0) -> Column:
     return out.cast("long")
 
 
-#: every hyperplane of every table as ONE array<array<double>> literal,
-#: ordered [t*PLANES_PER_TABLE + i] — the single-transform bucket path
-_ALL_PLANES = [p for table in HYPERPLANES for p in table]
+#: every hyperplane of every table as ONE array<array<double>> SQL
+#: literal, ordered [t*PLANES_PER_TABLE + i] — the single-transform
+#: bucket path
+_PLANES_SQL = double_array_sql([p for table in HYPERPLANES for p in table])
+#: table t's bucket id from the ``_dots`` slots: bit i set iff the
+#: dot product with plane i is > 0
+_BUCKETS_SQL = [
+    "CAST("
+    + " + ".join(
+        f"CASE WHEN _dots[{t * PLANES_PER_TABLE + i}] > 0 "
+        f"THEN {1 << i} ELSE 0 END"
+        for i in range(PLANES_PER_TABLE)
+    )
+    + f" AS BIGINT) AS bucket{t}"
+    for t in range(NUM_TABLES)
+]
+_BUCKET_COLS = [f"bucket{t}" for t in range(NUM_TABLES)]
 
 
 def with_buckets(df: DataFrame, vec_col: str = "v") -> DataFrame:
@@ -105,26 +139,12 @@ def with_buckets(df: DataFrame, vec_col: str = "v") -> DataFrame:
     instead of recomputing folds. Fold order per plane is unchanged,
     so bucket ids stay bit-identical to ``bucket_expr`` (asserted in
     tests) and to the SQL oracle."""
-    planes_lit = F.array(
-        *[F.array(*[F.lit(x) for x in p]) for p in _ALL_PLANES]
+    dots = f"transform({_PLANES_SQL}, p -> {_dot_sql(f'`{vec_col}`', 'p')})"
+    return (
+        df.selectExpr("*", f"{dots} AS _dots")
+        .selectExpr("*", *_BUCKETS_SQL)
+        .drop("_dots")
     )
-    out = df.withColumn(
-        "_dots",
-        F.transform(planes_lit, lambda p: dot(F.col(vec_col), p)),
-    )
-    dots = F.col("_dots")
-    for t in range(NUM_TABLES):
-        bits = [
-            F.when(
-                dots[t * PLANES_PER_TABLE + i] > 0, F.lit(1 << i)
-            ).otherwise(F.lit(0))
-            for i in range(PLANES_PER_TABLE)
-        ]
-        acc = bits[0]
-        for b in bits[1:]:
-            acc = acc + b
-        out = out.withColumn(f"bucket{t}", acc.cast("long"))
-    return out.drop("_dots")
 
 
 def cosine_dedup_pairs(
@@ -151,7 +171,7 @@ def cosine_dedup_pairs(
     ).withColumn("nrm", norm(F.col("v")))
     vecs = vecs.persist()  # no eager count (r15): see lsh_ann_topk
     cands = banded_self_pairs(
-        vecs, "nid", [f"bucket{t}" for t in range(NUM_TABLES)], max_bucket
+        vecs, "nid", _BUCKET_COLS, max_bucket
     )
     va = vecs.select(
         F.col("nid").alias("a_id"), F.col("v").alias("va"),
@@ -265,7 +285,7 @@ def lsh_ann_topk(
     # NUM_TABLES separate joins + union: candidates meet when they
     # share a bucket in ANY table, and the composite key keeps tables
     # independent
-    corpus_b = explode_bands(vecs, "nid", [f"bucket{t}" for t in range(NUM_TABLES)])
+    corpus_b = explode_bands(vecs, "nid", _BUCKET_COLS)
     queries_b = explode_bands(
         queries, "qid", [f"qbucket{t}" for t in range(NUM_TABLES)]
     )
@@ -328,9 +348,7 @@ def _centroids_lit(centroids: list[list[float]]) -> Column:
     are then computed by a runtime ``transform`` loop over it — the
     generated code stays small and compiles fast, instead of k
     unrolled fold expressions per row."""
-    return F.array(
-        *[F.array(*[F.lit(x) for x in c]) for c in centroids]
-    )
+    return F.expr(double_array_sql(centroids))
 
 
 def _ivf_dist_pairs(v: Column, centroids: list[list[float]]) -> Column:
@@ -691,50 +709,35 @@ def knn_graph(
     driver-side data, one window shuffle keyed by the source vector.
     Recall lever = NUM_TABLES × PLANES_PER_TABLE, exactly as in
     ``lsh_ann_topk``."""
-    from pyspark.sql.window import Window
-
     # persist WITHOUT an eager count (r15): every consumer (pair-gen
     # exchange + the two scoring-join broadcast builds) executes inside
     # the first downstream action, and block-level locks fill the cache
     # exactly once there — the separate count was one full extra pass
-    # (A/B at sf0.1: medians 4.10 -> 3.85)
+    # (A/B at sf0.1: medians 4.10 -> 3.85). The expressions are SQL
+    # text (see the module docstring).
     vecs = with_buckets(
-        ensure_parallelism(df).select(
-            F.col(id_col).cast("long").alias("nid"),
-            F.col(vec_col).cast("array<double>").alias("v"),
+        ensure_parallelism(df).selectExpr(
+            f"CAST(`{id_col}` AS BIGINT) AS nid",
+            f"CAST(`{vec_col}` AS ARRAY<DOUBLE>) AS v",
         )
-    ).withColumn("nrm", norm(F.col("v"))).persist()
-    pairs = banded_self_pairs(
-        vecs, "nid", [f"bucket{t}" for t in range(NUM_TABLES)], max_bucket
-    )
+    ).selectExpr(
+        "*", "sqrt(aggregate(v, 0D, (acc, x) -> acc + x * x)) AS nrm"
+    ).persist()
+    pairs = banded_self_pairs(vecs, "nid", _BUCKET_COLS, max_bucket)
     # each vector's norm is computed ONCE above, so scoring a pair is
     # one dot-product fold instead of three (cosine() would refold
     # both norms per candidate) — bit-identical: the norm is the same
     # double either way, ~3x less work on the quadratic-ish stage
     scored = (
         pairs.join(
-            vecs.select(
-                F.col("nid").alias("a_id"),
-                F.col("v").alias("va"),
-                F.col("nrm").alias("na"),
-            ),
+            vecs.selectExpr("nid AS a_id", "v AS va", "nrm AS na"), "a_id"
+        )
+        .join(vecs.selectExpr("nid AS b_id", "v AS vb", "nrm AS nb"), "b_id")
+        .selectExpr(
             "a_id",
-        )
-        .join(
-            vecs.select(
-                F.col("nid").alias("b_id"),
-                F.col("v").alias("vb"),
-                F.col("nrm").alias("nb"),
-            ),
             "b_id",
+            f"round({_dot_sql('va', 'vb')} / (na * nb), 5) AS cos_sim",
         )
-        .withColumn(
-            "cos_sim",
-            F.round(
-                dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 5
-            ),
-        )
-        .select("a_id", "b_id", "cos_sim")
     ).persist()
     # each undirected candidate edge scored ONCE, used for both ends:
     # the persist makes the union below read the cached scored rows
@@ -745,22 +748,20 @@ def knn_graph(
     # measured in between (3.71) — the union + cache keeps the
     # per-branch WindowGroupLimit pushdown AND single scoring. No
     # eager count: the window action's two union branches fill the
-    # cache under block locks, one compute + one read. MLlib-style
-    # lifecycle (like `vecs` above): the ContextCleaner reclaims the
-    # entry when the result frame is garbage collected.
-    edges = scored.select(
-        F.col("a_id").alias("src"), F.col("b_id").alias("nbr"), "cos_sim"
-    ).unionAll(
-        scored.select(
-            F.col("b_id").alias("src"), F.col("a_id").alias("nbr"), "cos_sim"
-        )
-    )
-    w = Window.partitionBy("src").orderBy(F.desc("cos_sim"), F.asc("nbr"))
-    return (
-        edges.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("src", "nbr", "cos_sim", "rnk")
-    )
+    # cache under block locks, one compute + one read. Lifetime (like
+    # `vecs` above): the SQL cache entry stays until unpersist — the
+    # ContextCleaner does not reclaim it — and an identical later
+    # call reuses it through plan matching.
+    edges = scored.selectExpr(
+        "a_id AS src", "b_id AS nbr", "cos_sim"
+    ).unionAll(scored.selectExpr("b_id AS src", "a_id AS nbr", "cos_sim"))
+    return edges.selectExpr(
+        "src",
+        "nbr",
+        "cos_sim",
+        "CAST(row_number() OVER (PARTITION BY src "
+        "ORDER BY cos_sim DESC, nbr ASC) AS BIGINT) AS rnk",
+    ).where(f"rnk <= {int(k)}")
 
 
 # --------------------------------------------- scalar quantization
@@ -800,8 +801,8 @@ def quantization_audit(
         .orderBy("pos")
         .collect()
     )  # 2×DIM scalars — the same model-sized collect as IVF training
-    mn_lit = F.array(*[F.lit(float(r["mn"])) for r in dims])
-    mx_lit = F.array(*[F.lit(float(r["mx"])) for r in dims])
+    mn_lit = F.expr(double_array_sql([r["mn"] for r in dims]))
+    mx_lit = F.expr(double_array_sql([r["mx"] for r in dims]))
     with_rng = vecs.withColumn(
         "_z",
         F.zip_with(
@@ -959,7 +960,7 @@ def query_ann_store(
         if d > 0:
             qb |= 1 << i
     qn = sum(x * x for x in query_vec) ** 0.5
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
+    qv = F.expr(double_array_sql(query_vec))
     probes = [qb] + (
         [qb ^ (1 << i) for i in range(PLANES_PER_TABLE)] if multiprobe else []
     )
@@ -1234,7 +1235,7 @@ def pq_train_codebooks(
         for j in range(m)
     ]
     for _ in range(iters):
-        books_lit = F.array(*[_centroids_lit(b) for b in books])
+        books_lit = F.expr(double_array_sql(books))
         sliced = vecs.select(
             F.explode(
                 F.array(
@@ -1339,6 +1340,7 @@ JL_ROWS: list[list[float]] = [
     ]
     for _ in range(JL_OUT_DIM)
 ]
+_JL_ROWS_SQL = double_array_sql(JL_ROWS)
 
 
 def jl_project(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -1349,11 +1351,11 @@ def jl_project(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     matrix — per-row codegen folds, zero shuffle, no training, no
     collect; the projection matrix is part of the code, so results
     are reproducible everywhere forever."""
-    rows_lit = F.array(*[F.array(*[F.lit(x) for x in r]) for r in JL_ROWS])
     return ensure_parallelism(df).select(
         F.col(id_col).cast("long").alias(id_col),
         F.transform(
-            rows_lit, lambda r: dot(F.col(vec_col).cast("array<double>"), r)
+            F.expr(_JL_ROWS_SQL),
+            lambda r: dot(F.col(vec_col).cast("array<double>"), r),
         ).alias("projected"),
     )
 
@@ -1456,10 +1458,11 @@ def _ivfpq_train_encode(
     when ``release_input`` — ivfpq_ann_topk passes False because its
     QUERY side probes the same frame after training (the r14 comment
     'every downstream consumer reads res now' missed that rescan;
-    ADVICE r14), and the ContextCleaner reclaims the entry when the
-    result frame is garbage collected. The eager res.count() is gone
-    too: the PQ seed collect is the first consumer and fills the
-    cache; the separate materialization pass was pure extra work."""
+    ADVICE r14); the entry then stays until unpersisted (SQL cache
+    entries are not reclaimed by the ContextCleaner). The eager
+    res.count() is gone too: the PQ seed collect is the first consumer
+    and fills the cache; the separate materialization pass was pure
+    extra work."""
     sub = dim // m
     vecs = vecs.persist()
     cents = train_ivf_centroids(vecs)
@@ -1533,10 +1536,7 @@ def _ivfpq_query(
             ),
         )
     )
-    book_lits = [
-        F.array(*[F.array(*[F.lit(x) for x in c]) for c in books[j]])
-        for j in range(m)
-    ]
+    book_lits = [_centroids_lit(books[j]) for j in range(m)]
     cand = probes.join(encoded, "cid").filter(F.col("qid") != F.col("nid"))
     adc = None
     for j in range(m):

@@ -51,7 +51,6 @@ ALLOWLIST: dict[tuple[str, str], tuple[int, str]] = {
     # graph: dangling-mass / normalization scalars; modularity's
     # 1-row total (the label-map joins are GATED at graph.py:831+)
     ("operators/graph.py", "pagerank"): (2, "SCALAR"),
-    ("operators/graph.py", "normalize"): (1, "SCALAR"),
     ("operators/graph.py", "directed_modularity"): (1, "SCALAR"),
     # 4-scalar min/max quantization stats
     ("operators/layout.py", "zorder_audit"): (1, "SCALAR"),

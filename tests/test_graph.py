@@ -359,6 +359,39 @@ def test_hits_persisted_frames_bounded_at_depth(spark):
     assert out[5]["hub"] == 0.0 and out[5]["authority"] == 0.0
 
 
+def test_hits_live_checkpoints_bounded_during_loop(spark, monkeypatch):
+    """Half-step checkpoint t is read only by half-step t+1, so it is
+    released once checkpoint t+2 exists: however many iterations run,
+    at most three half-step block sets are live at once (the edge
+    cache makes the fourth persistent RDD). Releasing them only after
+    the loop kept 2·n_iters sets live at the peak."""
+    from lynx_spark.operators.graph import hits_scores
+
+    edges = spark.createDataFrame(
+        [(1, 3), (1, 4), (2, 3), (2, 4)], ["src", "nbr"]
+    )
+    nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 4, 5)], ["vec_id"])
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    live: list[int] = []
+    frame_cls = type(edges)
+    checkpoint = frame_cls.localCheckpoint
+
+    def counting(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        live.append(jsc.getPersistentRDDs().size() - before)
+        return out
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", counting)
+    result = hits_scores(edges, nodes, "vec_id", n_iters=20)
+    monkeypatch.undo()
+    assert len(live) == 40
+    assert max(live) <= 4, f"peak of {max(live)} live persistent RDDs"
+    out = {r["vec_id"]: r for r in result.collect()}
+    for hub in (1, 2):
+        assert abs(out[hub]["hub"] - 0.5) < 1e-9
+
+
 def test_hits_empty_edges_all_zero_not_nan(spark):
     """An empty edge list leaves every score 0.0 — the L1 normalizer
     total is 0 and the division guard must keep NaN out."""

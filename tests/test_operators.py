@@ -2130,6 +2130,31 @@ def test_video_frame_features_real_decode(spark):
     assert len(set(v4.values())) == len(v4)
 
 
+def test_double_array_sql_round_trips_exactly(spark):
+    """The SQL-text matrix literal parses back to the very same IEEE
+    doubles (extremes, exponents, signed zero, non-finite values),
+    nested arrays included — the premise of building the hyperplane,
+    centroid and codebook literals as text."""
+    import math
+    import struct
+
+    from lynx_spark.operators._util import double_array_sql
+
+    vals = [
+        0.1, -0.5, 1e-05, 5e-324, 1.7976931348623157e308, -0.0, 3.0,
+        2.0 / 3.0, float("nan"), float("inf"), -float("inf"),
+    ] + sim.HYPERPLANES[0][0]
+    got = spark.range(1).select(
+        F.expr(double_array_sql([vals, vals[:2]])).alias("m")
+    ).collect()[0]["m"]
+    bits = lambda xs: [struct.pack("<d", x) for x in xs]  # noqa: E731
+    assert len(got) == 2
+    assert bits(got[1]) == bits(vals[:2])
+    finite = [i for i, x in enumerate(vals) if not math.isnan(x)]
+    assert bits([got[0][i] for i in finite]) == bits([vals[i] for i in finite])
+    assert math.isnan(got[0][8])
+
+
 def test_ann_store_partition_pruned_query(spark, tmp_path):
     from lynx_spark.operators import similarity as sim
     from pyspark.sql import functions as F
