@@ -287,24 +287,22 @@ def main() -> None:
         file=sys.stderr,
     )
 
-    # w1 (r14, VERDICT r13 task 4): the HTTP-path twin of w0 — the
-    # same 20k writes through the full /api/v1/write dispatch (WSGI
-    # request -> JSON parse -> WriteRequest -> WAL append + flush).
-    # m1 exposed this as the system's visible ingest ceiling (~3.3k
-    # writes/s, all dispatch); the write fast lane (server.py) now
-    # handles the hot route at the WSGI layer with identical
-    # parse/validate/500 semantics. Clean subprocess like w0. Every
+    # w1: the HTTP-path twin of w0 — the same 20k writes through the
+    # full /api/v1/write dispatch of the server's WSGI callable (route
+    # lookup -> JSON parse -> WriteRequest -> WAL append + flush),
+    # driven by werkzeug.test.Client. Clean subprocess like w0. Every
     # response is status-checked: a 500 must fail the row, not time it.
     w1_src = (
         "import json, sys, time, tempfile\n"
         f"sys.path.insert(0, {str(Path(__file__).resolve().parent)!r})\n"
         "from lynx_spark.engine import LynxEngine\n"
+        "from werkzeug.test import Client\n"
         "from lynx_spark.server import create_app\n"
         "reps = []\n"
         "for _ in range(3):\n"
         "    with tempfile.TemporaryDirectory() as wal_dir:\n"
         "        engine = LynxEngine(None, wal_dir)\n"
-        "        client = create_app(engine).test_client()\n"
+        "        client = Client(create_app(engine))\n"
         "        bodies = [json.dumps({\n"
         "            'namespace': 'bench', 'measurement': 'cpu',\n"
         "            'value': str(i), 'metadata': {'host': f'h{i % 50}'},\n"
@@ -419,6 +417,8 @@ def main() -> None:
     # Timed span: min-of-3 of the JOIN query round trip.
     import tempfile as _tf
 
+    from werkzeug.test import Client as _Client
+
     from lynx_spark.server import create_app as _mk_app
     from lynx_spark.sources.coldtier import TieredEngine as _TE
 
@@ -436,7 +436,7 @@ def main() -> None:
             Path(_mt_dir) / "cold",
             multi_table=True,
         )
-        _c = _mk_app(_eng).test_client()
+        _c = _Client(_mk_app(_eng))
         for i in range(1000):
             for meas, val in (("cpu", str(i)), ("mem", str(i * 2))):
                 _check(
@@ -518,7 +518,7 @@ def main() -> None:
             Path(_mt_dir) / "cold",
             multi_table=True,
         )
-        _c = _mk_app(_eng).test_client()
+        _c = _Client(_mk_app(_eng))
         t0 = time.perf_counter()
         for i in range(50_000):
             _c.post(
@@ -675,7 +675,7 @@ def main() -> None:
             files_read <= 2 and files_total >= 30,
             f"c1: pruning failed at volume ({files_read}/{files_total})",
         )
-        _c = _mk_app(_eng).test_client()
+        _c = _Client(_mk_app(_eng))
         c1_day_runs = []
         for _ in range(3):
             t0 = time.perf_counter()

@@ -1,13 +1,20 @@
-"""HTTP API: the reference's three routes (src/main.rs).
+"""HTTP API: the reference's three routes (src/main.rs) and the tiered
+engine's two, served by one plain WSGI callable.
 
-    GET  /health        -> 200                       (main.rs:51-53)
-    POST /api/v1/write  -> 200 | 500                 (main.rs:55-66)
-    POST /api/v1/query  -> 200 | 404 | 500           (main.rs:68-89)
+    GET|HEAD /health       -> 200                     (main.rs:51-53)
+    POST /api/v1/write     -> 200 | 500               (main.rs:55-66)
+    POST /api/v1/query     -> 200 | 404 | 500         (main.rs:68-89)
+    POST /api/v1/flush     -> 200 | 404 | 500         (superset)
+    POST /api/v1/optimize  -> 200 | 404 | 500         (superset)
+    any other path -> 404; another method on one of these paths -> 405
 
-Query body: ``{"namespace": .., "query": .., "format": "Json"|"Table"}``
-(main.rs:43-49). Default format when omitted is the pretty TABLE
-(main.rs:80). Unknown namespace/table -> 404, NOT an empty result
-(main.rs:83). Errors print to stderr and return 500 (main.rs:59-64).
+POST bodies are JSON, sent as ``application/json`` (with or without
+parameters) or ``application/*+json``; any other type is a 500 like a
+malformed body. Query body: ``{"namespace": .., "query": ..,
+"format": "Json"|"Table"}`` (main.rs:43-49). Default format when
+omitted is the pretty TABLE (main.rs:80). Unknown namespace/table ->
+404, NOT an empty result (main.rs:83). Every error is a 500 whose
+traceback is logged to stderr (the reference prints it, main.rs:59-64).
 
 Config via CLI/env like the reference (main.rs:19-29):
     LYNX_HTTP_ADDR (default 127.0.0.1:3000)
@@ -15,7 +22,8 @@ Config via CLI/env like the reference (main.rs:19-29):
     LYNX_WAL_MAX_SEGMENT_SIZE (default 52428800)
 
 Superset (absent in the reference): LYNX_COLD_DIRECTORY enables the
-tiered engine (hot buffer + date-partitioned parquet) and two routes:
+tiered engine (hot buffer + date-partitioned parquet) and its two
+routes, which are 404 without it:
 POST /api/v1/flush ({"namespace": ...} -> rows flushed) and
 POST /api/v1/optimize ({"namespace": .., "table"?: .., "min_files"?:
 2, "vacuum"?: false} -> files replaced/deleted) — small-file
@@ -28,138 +36,120 @@ background flush watermark (hot buffer bounded without any
 from __future__ import annotations
 
 import argparse
+import json
+import logging
 import os
 import sys
 
-from flask import Flask, Response, jsonify, request
+from werkzeug.wsgi import get_content_length, get_input_stream
 
 from lynx_spark.engine import LynxEngine
 from lynx_spark.formatting import rows_to_json, rows_to_table
 from lynx_spark.model import WriteRequest
 
+log = logging.getLogger(__name__)
 
-def create_app(engine: LynxEngine) -> Flask:
-    app = Flask("lynx_spark")
+JSON = "application/json"
+OK = ("200 OK", None, b"")
+NOT_FOUND = ("404 NOT FOUND", None, b"")
 
-    @app.get("/health")
-    def health():  # main.rs:51-53
-        return Response(status=200)
 
-    @app.post("/api/v1/write")
-    def write():  # main.rs:55-66
-        try:
-            payload = request.get_json(force=False, silent=False)
-            req = WriteRequest.from_json_dict(payload)
-            engine.write(req)
-            return Response(status=200)
-        except Exception as e:  # noqa: BLE001 — mirror catch-all -> 500
-            print(repr(e), file=sys.stderr)
-            return Response(status=500)
+def _json_body(environ) -> object:
+    """The request's JSON payload. A body without Content-Length
+    (chunked) is read only when the server terminates the stream."""
+    mimetype = environ.get("CONTENT_TYPE", "").partition(";")[0].strip().lower()
+    if mimetype != JSON and not (
+        mimetype.startswith("application/") and mimetype.endswith("+json")
+    ):
+        raise ValueError(f"not a JSON content type: {mimetype!r}")
+    length = get_content_length(environ)
+    if length is None:
+        return json.loads(get_input_stream(environ).read())
+    # read exactly the declared bytes: get_input_stream's LimitedStream
+    # wrapper would cost about as much as parsing the body
+    return json.loads(environ["wsgi.input"].read(length))
 
-    @app.post("/api/v1/flush")
-    def flush():  # superset: drain hot buffer to the cold tier
-        from lynx_spark.sources.coldtier import TieredEngine
 
-        if not isinstance(engine, TieredEngine):
-            return Response(status=404)  # no cold tier configured
-        try:
-            payload = request.get_json(force=False, silent=False)
-            rows = engine.flush(payload["namespace"])
-            return jsonify({"rows_flushed": rows})
-        except Exception as e:  # noqa: BLE001
-            print(repr(e), file=sys.stderr)
-            return Response(status=500)
+def _json_response(obj: dict) -> tuple:
+    body = json.dumps(obj, separators=(",", ":"), sort_keys=True) + "\n"
+    return "200 OK", JSON, body.encode()
 
-    @app.post("/api/v1/optimize")
-    def optimize():  # superset: pack small cold files (+ opt. vacuum)
-        from lynx_spark.sources.coldtier import TieredEngine
 
-        if not isinstance(engine, TieredEngine):
-            return Response(status=404)  # no cold tier configured
-        try:
-            payload = request.get_json(force=False, silent=False)
-            replaced = engine.optimize(
-                payload["namespace"],
-                table=payload.get("table"),
-                min_files=int(payload.get("min_files", 2)),
-            )
-            deleted = 0
-            if payload.get("vacuum"):
-                deleted = engine.vacuum(payload["namespace"])
-            return jsonify(
-                {"files_replaced": replaced, "files_deleted": deleted}
-            )
-        except Exception as e:  # noqa: BLE001
-            print(repr(e), file=sys.stderr)
-            return Response(status=500)
+def create_app(engine: LynxEngine):
+    """The WSGI callable serving ``engine``: one handler per route,
+    each returning ``(status, content type or None, body)``."""
+    from lynx_spark.sources.coldtier import TieredEngine
 
-    @app.post("/api/v1/query")
-    def query():  # main.rs:68-89
-        try:
-            payload = request.get_json(force=False, silent=False)
-            namespace = payload["namespace"]
-            sql = payload["query"]
-            fmt = payload.get("format")  # None -> Table (main.rs:80)
-            if fmt not in (None, "Json", "Table"):
-                # serde rejects unknown enum variants (main.rs:36-40)
-                raise ValueError(f"unknown format: {fmt!r}")
-        except Exception as e:  # noqa: BLE001
-            print(repr(e), file=sys.stderr)
-            return Response(status=500)
-        try:
-            df = engine.query(namespace, sql)
-            if df is None:
-                return Response(status=404)
-            columns = df.columns
-            rows = [tuple(r) for r in df.collect()]
-            if fmt == "Json":
-                return Response(
-                    rows_to_json(columns, rows), mimetype="application/json"
-                )
-            return Response(rows_to_table(columns, rows), mimetype="text/plain")
-        except Exception as e:  # noqa: BLE001
-            print(repr(e), file=sys.stderr)
-            return Response(status=500)
+    def health(environ):  # main.rs:51-53
+        return OK
 
-    # WSGI fast lane for the write route (r14, VERDICT r13 task 4).
-    # Ingest throughput is bounded by per-request dispatch, not by the
-    # WAL: profiling showed Flask's request context + routing +
-    # get_json cost ~2-3x the actual write. The hot path is exactly
-    # (parse JSON body -> WriteRequest -> engine.write -> 200|500), so
-    # handle it at the WSGI layer with the same semantics and fall
-    # through to Flask for anything unusual (non-JSON content type,
-    # chunked bodies) so those keep their existing behavior. The
-    # per-record WAL flush inside engine.write is untouched
-    # (src/wal.rs:247 parity).
-    import json as _json
+    def write(environ):  # main.rs:55-66
+        engine.write(WriteRequest.from_json_dict(_json_body(environ)))
+        return OK
 
-    flask_wsgi = app.wsgi_app
+    def query(environ):  # main.rs:68-89
+        payload = _json_body(environ)
+        fmt = payload.get("format")  # None -> Table (main.rs:80)
+        if fmt not in (None, "Json", "Table"):
+            # serde rejects unknown enum variants (main.rs:36-40)
+            raise ValueError(f"unknown format: {fmt!r}")
+        df = engine.query(payload["namespace"], payload["query"])
+        if df is None:
+            return NOT_FOUND
+        columns = df.columns
+        rows = [tuple(r) for r in df.collect()]
+        if fmt == "Json":
+            return "200 OK", JSON, rows_to_json(columns, rows).encode()
+        body = rows_to_table(columns, rows).encode()
+        return "200 OK", "text/plain; charset=utf-8", body
 
-    def wsgi_with_write_fastpath(environ, start_response):
-        if (
-            environ.get("PATH_INFO") == "/api/v1/write"
-            and environ.get("REQUEST_METHOD") == "POST"
-            and environ.get("CONTENT_TYPE", "").startswith("application/json")
-            and environ.get("CONTENT_LENGTH")
-        ):
+    def flush(environ):  # superset: drain hot buffer to the cold tier
+        rows = engine.flush(_json_body(environ)["namespace"])
+        return _json_response({"rows_flushed": rows})
+
+    def optimize(environ):  # superset: pack small cold files (+ opt. vacuum)
+        payload = _json_body(environ)
+        replaced = engine.optimize(
+            payload["namespace"],
+            table=payload.get("table"),
+            min_files=int(payload.get("min_files", 2)),
+        )
+        deleted = engine.vacuum(payload["namespace"]) if payload.get("vacuum") else 0
+        return _json_response({"files_replaced": replaced, "files_deleted": deleted})
+
+    def no_cold_tier(environ):
+        return NOT_FOUND
+
+    tiered = isinstance(engine, TieredEngine)
+    routes = {
+        "/health": (("GET", "HEAD"), health),
+        "/api/v1/write": (("POST",), write),
+        "/api/v1/query": (("POST",), query),
+        "/api/v1/flush": (("POST",), flush if tiered else no_cold_tier),
+        "/api/v1/optimize": (("POST",), optimize if tiered else no_cold_tier),
+    }
+
+    def app(environ, start_response):
+        path = environ.get("PATH_INFO")
+        method = environ.get("REQUEST_METHOD")
+        route = routes.get(path)
+        headers = []
+        if route is None:
+            status, ctype, body = NOT_FOUND
+        elif method not in route[0]:
+            status, ctype, body = "405 METHOD NOT ALLOWED", None, b""
+            headers.append(("Allow", ", ".join(route[0])))
+        else:
             try:
-                body = environ["wsgi.input"].read(
-                    int(environ["CONTENT_LENGTH"])
-                )
-                engine.write(
-                    WriteRequest.from_json_dict(_json.loads(body))
-                )
-                start_response("200 OK", [("Content-Length", "0")])
-                return [b""]
-            except Exception as e:  # noqa: BLE001 — catch-all -> 500
-                print(repr(e), file=sys.stderr)
-                start_response(
-                    "500 INTERNAL SERVER ERROR", [("Content-Length", "0")]
-                )
-                return [b""]
-        return flask_wsgi(environ, start_response)
-
-    app.wsgi_app = wsgi_with_write_fastpath
+                status, ctype, body = route[1](environ)
+            except Exception:  # noqa: BLE001 — catch-all -> 500 (main.rs:59-64)
+                log.exception("%s %s -> 500", method, path)
+                status, ctype, body = "500 INTERNAL SERVER ERROR", None, b""
+        if ctype is not None:
+            headers.append(("Content-Type", ctype))
+        headers.append(("Content-Length", str(len(body))))
+        start_response(status, headers)
+        return [body]
 
     return app
 
@@ -254,10 +244,11 @@ def main() -> None:
             spark, args.wal_directory, args.wal_max_segment_size,
             multi_table=args.multi_table,
         )
-    app = create_app(engine)
+    from werkzeug.serving import run_simple
+
     host, _, port = args.bind.rpartition(":")
     print(f"Starting server on {args.bind}", file=sys.stderr)
-    app.run(host=host or "127.0.0.1", port=int(port), threaded=True)
+    run_simple(host or "127.0.0.1", int(port), create_app(engine), threaded=True)
 
 
 if __name__ == "__main__":

@@ -1,11 +1,19 @@
-"""HTTP API tests (flask test client): exact status-code semantics of
-the reference (main.rs:51-89) plus the tiered superset routes."""
+"""HTTP API tests through ``werkzeug.test.Client`` on the server's WSGI
+callable: exact status-code semantics of the reference (main.rs:51-89)
+plus the tiered superset routes, and the request contract (methods,
+content types, bodies without Content-Length, response types)."""
 
 from __future__ import annotations
 
 import json
+import logging
+import subprocess
+import sys
+from pathlib import Path
 
 import pytest
+from werkzeug.datastructures import Headers
+from werkzeug.test import Client, EnvironBuilder, run_wsgi_app
 
 from lynx_spark.engine import LynxEngine
 from lynx_spark.server import create_app
@@ -14,14 +22,14 @@ from lynx_spark.sources.coldtier import TieredEngine
 
 @pytest.fixture()
 def client(spark, tmp_path):
-    app = create_app(LynxEngine(spark, tmp_path / "wal"))
-    return app.test_client()
+    return Client(create_app(LynxEngine(spark, tmp_path / "wal")))
 
 
 @pytest.fixture()
 def tiered_client(spark, tmp_path):
-    app = create_app(TieredEngine(spark, tmp_path / "wal", tmp_path / "cold"))
-    return app.test_client()
+    return Client(
+        create_app(TieredEngine(spark, tmp_path / "wal", tmp_path / "cold"))
+    )
 
 
 WRITE = {
@@ -211,10 +219,9 @@ def test_join_rejected_by_default(client):
 
 @pytest.fixture()
 def multi_client(spark, tmp_path):
-    app = create_app(
-        LynxEngine(spark, tmp_path / "wal", multi_table=True)
+    return Client(
+        create_app(LynxEngine(spark, tmp_path / "wal", multi_table=True))
     )
-    return app.test_client()
 
 
 def test_multi_table_join_behind_flag(multi_client):
@@ -280,7 +287,7 @@ def test_multi_table_tiered_joins_hot_and_cold(spark, tmp_path):
     eng = TieredEngine(
         spark, tmp_path / "wal", tmp_path / "cold", multi_table=True
     )
-    c = create_app(eng).test_client()
+    c = Client(create_app(eng))
     _w(c, "ns", "cpu", "90", 1, {"host": "a"})
     assert c.post("/api/v1/flush", json={"namespace": "ns"}).status_code == 200
     _w(c, "ns", "mem", "512", 1, {"host": "a"})
@@ -387,7 +394,7 @@ def test_multi_table_404_vs_500_matrix(spark, tmp_path):
     eng = TieredEngine(
         spark, tmp_path / "wal", tmp_path / "cold", multi_table=True
     )
-    c = create_app(eng).test_client()
+    c = Client(create_app(eng))
     _w(c, "ns", "cpu", "90", 1, {"host": "a"})
     assert c.post("/api/v1/flush", json={"namespace": "ns"}).status_code == 200
     _w(c, "ns", "mem", "512", 1, {"host": "a"})
@@ -414,24 +421,23 @@ def test_multi_table_404_vs_500_matrix(spark, tmp_path):
     assert q("ns", join) == 200
 
 
-def test_write_fastpath_semantics_match_flask_route(client):
-    """r14 (VERDICT r13 task 4): the write route is handled by a WSGI
-    fast lane; its parse/validate/error semantics must be identical to
-    the Flask route it bypasses, and anything unusual must fall
-    through to Flask unchanged."""
-    # happy path through the fast lane (Content-Length + JSON type)
+def test_write_route_semantics(client):
+    """The write route and every other route share one path through
+    the WSGI callable: parse the JSON body -> ``WriteRequest`` ->
+    ``engine.write`` -> 200, and any error on the way is a 500."""
+    # happy path (Content-Length + JSON type)
     r = client.post(
         "/api/v1/write",
         data=json.dumps(WRITE),
         content_type="application/json",
     )
     assert r.status_code == 200
-    # malformed JSON body -> 500 (fast lane's own catch)
+    # malformed JSON body -> 500
     r = client.post(
         "/api/v1/write", data="{nope", content_type="application/json"
     )
     assert r.status_code == 500
-    # missing field -> 500 (same from_json_dict validation)
+    # missing field -> 500 (from_json_dict validation)
     bad = dict(WRITE)
     del bad["timestamp"]
     r = client.post(
@@ -439,13 +445,12 @@ def test_write_fastpath_semantics_match_flask_route(client):
         content_type="application/json",
     )
     assert r.status_code == 500
-    # non-JSON content type falls through to Flask -> 500 (get_json
-    # raises UnsupportedMediaType inside the route's catch-all)
+    # non-JSON content type -> 500, like a malformed body
     r = client.post(
         "/api/v1/write", data=json.dumps(WRITE), content_type="text/plain"
     )
     assert r.status_code == 500
-    # the fast lane never swallows other routes
+    # the write route never swallows other routes
     assert client.get("/health").status_code == 200
     r = client.post(
         "/api/v1/query",
@@ -454,3 +459,109 @@ def test_write_fastpath_semantics_match_flask_route(client):
     )
     assert r.status_code == 200
     assert json.loads(r.get_data())[0]["value"] == "search_button"
+
+
+# ------------------------------------------------ the HTTP contract
+
+JSON = "application/json"
+JSON_QUERY = {"namespace": "events", "query": "SELECT * FROM clicks", "format": "Json"}
+TABLE_QUERY = {"namespace": "events", "query": "SELECT * FROM clicks"}
+NO_LENGTH = {"CONTENT_LENGTH": None}
+TABLE_BODY = (
+    "+----------------------------+---------------+\n"
+    "| timestamp                  | value         |\n"
+    "+----------------------------+---------------+\n"
+    "| 1970-01-01T00:00:00.000001 | search_button |\n"
+    "+----------------------------+---------------+"
+).encode()
+
+
+def _call(app, method, path, content_type=None, payload=None, environ=None):
+    """One request straight through the WSGI callable: an environ
+    that ``werkzeug.test.Client`` cannot build (no ``CONTENT_LENGTH``)
+    needs no client. Returns (status, Content-Type, body)."""
+    env = EnvironBuilder(
+        path=path,
+        method=method,
+        content_type=content_type,
+        data=None if payload is None else json.dumps(payload),
+    ).get_environ()
+    for key, value in (environ or {}).items():
+        if value is None:
+            env.pop(key, None)
+        else:
+            env[key] = value
+    app_iter, status, headers = run_wsgi_app(app, env, buffered=True)
+    body = b"".join(app_iter)
+    return int(status.split()[0]), Headers(headers).get("Content-Type"), body
+
+
+FLUSH = {"namespace": "events"}
+CHUNKED = dict(NO_LENGTH, **{"wsgi.input_terminated": True})
+TEXT = "text/plain"
+
+
+@pytest.mark.parametrize(
+    "method, path, content_type, payload, environ, status, resp_type, resp_body",
+    [
+        ("HEAD", "/health", None, None, None, 200, ..., b""),
+        ("GET", "/health", None, None, None, 200, ..., b""),
+        ("GET", "/api/v1/write", None, None, None, 405, ..., ...),
+        ("POST", "/nope", JSON, WRITE, None, 404, ..., ...),
+        ("POST", "/api/v1/write", TEXT, WRITE, None, 500, ..., b""),
+        ("POST", "/api/v1/flush", TEXT, FLUSH, None, 500, ..., b""),
+        ("POST", "/api/v1/optimize", TEXT, FLUSH, None, 500, ..., b""),
+        ("POST", "/api/v1/query", TEXT, JSON_QUERY, None, 500, ..., b""),
+        ("POST", "/api/v1/write", "application/ld+json", WRITE, None, 200, ..., b""),
+        ("POST", "/api/v1/write", JSON + "; charset=utf-8", WRITE, None, 200, ..., b""),
+        ("POST", "/api/v1/write", JSON, WRITE, CHUNKED, 200, ..., b""),
+        ("POST", "/api/v1/write", JSON, WRITE, NO_LENGTH, 500, ..., b""),
+        ("POST", "/api/v1/flush", JSON, FLUSH, None, 200, JSON,
+         b'{"rows_flushed":1}\n'),
+        ("POST", "/api/v1/optimize", JSON, FLUSH, None, 200, JSON,
+         b'{"files_deleted":0,"files_replaced":0}\n'),
+        ("POST", "/api/v1/query", JSON, JSON_QUERY, None, 200, JSON,
+         b'[{"timestamp":"1970-01-01T00:00:00.000001","value":"search_button"}]'),
+        ("POST", "/api/v1/query", "application/vnd.api+json", TABLE_QUERY, None,
+         200, TEXT + "; charset=utf-8", TABLE_BODY),
+    ],
+)
+def test_http_contract(
+    spark, tmp_path, method, path, content_type, payload, environ, status,
+    resp_type, resp_body,
+):
+    """The status, Content-Type and body of every route on the tiered
+    engine (which serves all five), one request over one written row.
+    ``...`` leaves a field unchecked: empty error and status-only
+    responses carry no contract on their headers."""
+    app = create_app(TieredEngine(spark, tmp_path / "wal", tmp_path / "cold"))
+    assert _call(app, "POST", "/api/v1/write", JSON, WRITE)[0] == 200
+    got = _call(app, method, path, content_type, payload, environ)
+    assert got[0] == status
+    if resp_type is not ...:
+        assert got[1] == resp_type
+    if resp_body is not ...:
+        assert got[2] == resp_body
+
+
+def test_route_error_logs_traceback(client, caplog):
+    """A 500 says where it failed: the one catch-all logs the
+    exception with its traceback."""
+    with caplog.at_level(logging.ERROR, logger="lynx_spark.server"):
+        r = client.post("/api/v1/write", data="{nope", content_type=JSON)
+    assert r.status_code == 500
+    assert "Traceback" in caplog.text
+    assert "POST /api/v1/write" in caplog.text
+
+
+def test_server_import_leaves_flask_out():
+    """The server needs werkzeug only: importing it loads no flask."""
+    code = "import sys, lynx_spark.server; print('flask' in sys.modules)"
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+        check=True,
+    )
+    assert out.stdout.strip() == "False"
