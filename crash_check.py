@@ -18,7 +18,11 @@ a real process boundary:
   kill 3  mid-optimize: SIGKILL races a /api/v1/optimize rewrite of a
           many-file day partition. The commit-log rename is atomic, so
           the visible row set must be IDENTICAL whether or not the
-          rewrite landed; zero duplicates either way.
+          rewrite landed; zero duplicates either way. Besides the timed
+          races, one attempt kills after the optimize returned (commit
+          landed for certain) and one builds the lost-commit state by
+          hand (an uncommitted part-opt copy of a visible file plus a
+          .tmp-opt file, no commit JSON); ``ok`` requires both branches.
   kill 4  torn segment create: a kill between segment-file create and
           header flush leaves a 0-byte (or partial-header) .wal; the
           r14 replay fix must boot through it with data intact (found
@@ -210,19 +214,31 @@ def main() -> None:
     result["kill2_wal_only"] = k2
 
     # ------------------------------------- kill 3: mid-optimize rewrite
-    # Race the SIGKILL against the rewrite at several delays so the
-    # artifact witnesses BOTH branches of the atomic-commit contract:
-    # commit landed (packed set visible) and commit lost (original
-    # files visible). Either way the row set must be identical.
+    # Race the SIGKILL against the rewrite at several delays, then
+    # witness BOTH branches of the atomic-commit contract for certain:
+    # commit landed (kill after the optimize returned; packed set
+    # visible) and commit lost (the state a kill between the part-opt
+    # rename and the commit rename leaves, built by hand as kill 4
+    # builds torn segments; original files visible). Either way the
+    # row set must be identical.
     def fire_optimize() -> None:
         try:
             post("/api/v1/optimize", {"namespace": "crash"}, timeout=60)
         except (urllib.error.URLError, OSError, TimeoutError):
             pass  # killed mid-request: the point
 
+    def lose_optimize_commit() -> None:
+        day_dir = cold_dir / "crash" / "cpu" / "day=1970-01-01"
+        newest = max(day_dir.glob("part-flush*.parquet"))  # visible
+        orphan = day_dir / "part-opt999999-00000.parquet"
+        orphan.write_bytes(newest.read_bytes())
+        (day_dir / ".tmp-opt999999-00001").write_bytes(
+            newest.read_bytes()[:64]
+        )
+
     attempts = []
     val_counter = 0
-    for delay in (0.02, 0.08, 0.25):
+    for delay in (0.02, 0.08, 0.25, "after_return", "lost_commit"):
         # rebuild a many-small-file day: 8 single-row flush files
         for _ in range(8):
             val = f"c{val_counter}"
@@ -244,11 +260,17 @@ def main() -> None:
         commits_before = {
             p.name for p in (cold_dir / "_commits").glob("*.json")
         }
-        opt_thread = threading.Thread(target=fire_optimize, daemon=True)
-        opt_thread.start()
-        time.sleep(delay)
+        if delay == "after_return":
+            fire_optimize()
+        elif delay == "lost_commit":
+            lose_optimize_commit()
+        else:
+            opt_thread = threading.Thread(target=fire_optimize, daemon=True)
+            opt_thread.start()
+            time.sleep(delay)
         sigkill(proc)
-        opt_thread.join(timeout=30)
+        if isinstance(delay, float):
+            opt_thread.join(timeout=30)
         new_commits = {
             p.name for p in (cold_dir / "_commits").glob("*.json")
         } - commits_before
@@ -276,12 +298,15 @@ def main() -> None:
             errors,
         )
         attempts.append(att)
+    branches = {a["rewrite_commit_landed"] for a in attempts}
+    check(
+        branches == {False, True},
+        f"kill3: witnessed only rewrite_commit_landed={sorted(branches)}",
+        errors,
+    )
     result["kill3_mid_optimize"] = {
         "attempts": attempts,
-        "branches_witnessed": sorted(
-            {a["rewrite_commit_landed"] for a in attempts},
-            key=str,
-        ),
+        "branches_witnessed": sorted(branches, key=str),
     }
 
     # --------------------------------------- kill 4: torn segment create

@@ -102,34 +102,50 @@ class LynxEngine:
         errors raise (HTTP 500).
         """
         table_name = self._target_table(sql)  # lynx.rs:75
-        tables = self.buffer.tables(namespace)  # snapshot, lynx.rs:78
-        if tables is None:
+        tables = self.buffer.tables(namespace) or {}  # snapshot, lynx.rs:78
+        names = self._resolve_tables(sql, table_name, set(tables))
+        if not names:
             return None
-        if table_name is not None and table_name not in tables:
-            return None
-        if self.multi_table:
-            names = referenced_tables(sql, set(tables))
-            if table_name is not None:
-                names |= {table_name}
-            if not names:
-                return None  # CTE touching no table of this namespace
-        else:
-            names = {table_name}
+        return self._run_sql(
+            sql,
+            {name: self._hot_frame(tables[name], sql) for name in sorted(names)},
+        )
+
+    def _resolve_tables(
+        self, sql: str, table_name: str | None, candidates: set[str]
+    ) -> set[str]:
+        """Tables the query registers, out of the namespace's
+        ``candidates``; empty means 404: an unknown first-FROM table
+        (or namespace), or, in multi-table mode, a CTE touching no
+        table of this namespace."""
+        if table_name is not None and table_name not in candidates:
+            return set()
+        if not self.multi_table:
+            return {table_name}
+        names = referenced_tables(sql, candidates)
+        if table_name is not None:
+            names.add(table_name)
+        return names
+
+    def _hot_frame(self, partitions: dict[str, Measurements], sql: str) -> DataFrame:
+        """One table's buffered partitions as a DataFrame: the days the
+        query's bounds select, concatenated in day order."""
+        batch = measurements_to_arrow(
+            [partitions[day] for day in select_days(partitions, sql)]
+        )
+        return self.spark.createDataFrame(batch)
+
+    def _run_sql(self, sql: str, views: dict[str, DataFrame]) -> DataFrame:
+        """Register ``views`` and run the query. Per-query
+        re-registration so results reflect the latest snapshot
+        (lynx.rs:136-139); spark.sql analyzes eagerly, so once it
+        returns (still under the lock) the plan is bound to these
+        views."""
         with self._query_lock:
-            # per-query re-registration so results reflect the latest
-            # buffer (lynx.rs:136-139); spark.sql analyzes eagerly, so
-            # once it returns the plan is bound to this snapshot.
-            for name in sorted(names):
-                partitions = tables[name]
-                days = select_days(partitions, sql)
-                batch = measurements_to_arrow(
-                    [partitions[day] for day in days]  # day order
-                )
-                self.spark.createDataFrame(batch).createOrReplaceTempView(
-                    name
-                )
+            for name, df in views.items():
+                df.createOrReplaceTempView(name)
             if self.multi_table:
-                self._drop_stale_views(keep=names)
+                self._drop_stale_views(keep=set(views))
             return self.spark.sql(sql)
 
     def _target_table(self, sql: str) -> str | None:

@@ -69,7 +69,12 @@ window the round-1 two-phase rename left open):
 
 The streaming sink (streaming/ingest.py) writes the same commit log
 with batch-id-keyed entries, giving it exactly-once semantics through
-the identical mechanism.
+the identical mechanism. This module owns the whole format: commit
+and data file names, payloads and the sink ids reserved for the
+engine are spelled only in its "commit format" section, the log is
+listed by ONE function (read_commits) and its state derived by ONE
+fold (fold_commits) — the snapshot writer, the engine's accessors and
+the sink's replay-skip check all go through them.
 
 Schema parity: by default the registered view has the reference's
 schema [timestamp, value, *tags] — the hive ``day`` column stays
@@ -83,8 +88,11 @@ from __future__ import annotations
 
 import itertools
 import json
+import logging
 import os
 import re
+import shutil
+import threading
 from pathlib import Path
 
 import pyarrow as pa
@@ -93,18 +101,35 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lynx_spark.buffer import Measurements, partition_key
-from lynx_spark.engine import LynxEngine, measurements_to_arrow, select_days
-from lynx_spark.sqlutil import (
-    extract_time_bounds,
-    parse_table_name,
-    referenced_tables,
+from lynx_spark.engine import (  # noqa: F401 — select_days: traced by name here too
+    LynxEngine,
+    measurements_to_arrow,
+    select_days,
 )
+from lynx_spark.sqlutil import extract_time_bounds
 from lynx_spark.wal import (
     DEFAULT_MAX_SEGMENT_SIZE,
     WAL_HEADER,
+    Wal,
     encode_write_request,
     read_segment,
 )
+
+log = logging.getLogger(__name__)
+
+# ----------------------------------------------------- commit format
+#
+# Every commit-log name and payload is spelled in this module; the
+# engine below and the streaming sink (streaming/ingest.py) call it.
+#
+#   flush-<namespace>-NNNNNN.json   {"files", "watermarks": {ns: seg}}
+#   optimize-<namespace>-NNNNNN.json {"files", "replaced"}
+#   <sink>-NNNNNNNNN.json           {"files", "watermarks": {}}
+#   legacy-000000.json              {"files", "watermarks": {}}
+#   snapshot-NNNNNN-p<pid>-<n>.json  the fold of everything it replaced
+#
+# Data files: part-flushNNNNNN-00000, part-optNNNNNN-NNNNN and
+# part-<sink>-NNNNNNNNN-NNNNN (.parquet).
 
 COMMITS_DIR = "_commits"
 RESERVED_DIRS = frozenset({COMMITS_DIR, "_staging"})
@@ -171,52 +196,219 @@ def adopt_legacy_layout(cold_dir: Path) -> None:
         and not _COMMIT_ERA_FILE.search(p.name)
     ]
     if legacy:
-        atomic_write_json(
-            cdir / "legacy-000000.json",
-            {"files": legacy, "watermarks": {}},
+        _write_commit(
+            cold_dir, "legacy-000000.json", {"files": legacy, "watermarks": {}}
         )
+
+
+#: sink-id prefixes the engine's own names use: a colliding sink id
+#: would share flush/optimize file names (the orphan GC deletes
+#: uncommitted part-flush*/part-opt* files) or commit names
+_RESERVED_SINK_PREFIXES = ("flush", "snapshot", "legacy", "opt", "optimize")
+
+#: fold kind -> the state key holding each key's highest sequence
+_SEQ_KEYS = {"flush": "flush_ids", "optimize": "opt_ids", "stream": "stream_batches"}
+#: state keys folded by per-key max
+_MAX_KEYS = ("watermarks", *_SEQ_KEYS.values())
+
+#: compact the commit log once this many commit files accumulate
+COMMIT_COMPACT_THRESHOLD = 64
+
+#: re-lists before read_commits gives up on a log being folded under it
+_LIST_RETRIES = 50
+
+
+def commit_name(kind: str, key: str, seq: int) -> str:
+    """File name of a flush/optimize commit (``key`` = namespace) or a
+    stream batch commit (``key`` = sink id)."""
+    if kind == "stream":
+        return f"{key}-{seq:09d}.json"
+    return f"{kind}-{key}-{seq:06d}.json"
+
+
+def _parse_commit_name(name: str) -> tuple[str, str, int] | None:
+    """Inverse of commit_name, plus ("snapshot", "", id); None for the
+    legacy bootstrap commit and unparseable names."""
+    stem = name.removesuffix(".json")
+    if stem.startswith("snapshot-"):
+        sid = stem.split("-")[1]
+        return ("snapshot", "", int(sid)) if sid.isdigit() else None
+    head, _, tail = stem.rpartition("-")
+    if stem.startswith("legacy") or not head or not tail.isdigit():
+        return None
+    for kind in ("flush", "optimize"):
+        if head.startswith(kind + "-"):
+            return kind, head[len(kind) + 1 :], int(tail)
+    return "stream", head, int(tail)
+
+
+def _write_commit(cold_dir: Path, name: str, payload: dict) -> None:
+    atomic_write_json(Path(cold_dir) / COMMITS_DIR / name, payload)
+
+
+def read_commits(
+    cold_dir: Path, cache: dict[str, dict] | None = None
+) -> dict[str, dict]:
+    """Every entry now in the commit log, by file name. Commit files
+    are immutable, so ``cache`` (updated in place to the listing) saves
+    re-reading them. A concurrent compact_commits may fold a commit
+    away between the listing and its read: the FileNotFoundError
+    restarts the listing, which then sees the fold's snapshot (renamed
+    in before its sources are unlinked, so a re-list always sees a
+    superset). A vanished commit is never silently skipped — an
+    under-approximated log would let the orphan GC delete committed
+    files, or make the sink re-run a committed batch and unlink
+    visible files — so exhausting the retries RAISES."""
+    cdir = Path(cold_dir) / COMMITS_DIR
+    cache = {} if cache is None else cache
+    for _ in range(_LIST_RETRIES):
+        try:
+            names = sorted(p.name for p in cdir.glob("*.json"))
+            for name in names:
+                if name not in cache:
+                    cache[name] = json.loads((cdir / name).read_text())
+        except FileNotFoundError:
+            continue  # folded away mid-listing; re-list
+        for stale in cache.keys() - set(names):
+            del cache[stale]  # folded: its snapshot is listed
+        return cache
+    raise RuntimeError(
+        f"commit log listing unstable after {_LIST_RETRIES} retries; "
+        "refusing to return a possibly-partial committed set"
+    )
+
+
+def _merge_max(into: dict[str, int], src: dict[str, int]) -> None:
+    for k, v in src.items():
+        if k not in into or v > into[k]:
+            into[k] = v
+
+
+def fold_commits(entries: dict[str, dict]) -> dict:
+    """The commit-log state, folded from entries by file name:
+
+    - ``files``: VISIBLE files, every committed file minus every file
+      a rewrite (optimize) commit replaced. The subtraction is
+      order-free because file names are writer-unique and never
+      reused: a name in any ``replaced`` list is permanently dead;
+    - ``replaced``: tombstones, invisible but on disk until vacuum;
+    - ``watermarks``: per namespace, records in WAL segments below it
+      are already in parquet;
+    - ``flush_ids`` / ``opt_ids``: per namespace, the highest flush /
+      optimize id committed (so ids, and file names, never repeat);
+    - ``stream_batches``: per sink, the highest committed batch id.
+
+    The last four are the max over each entry's payload (snapshots
+    carry them) and its parsed file name."""
+    state: dict = {"files": set(), "replaced": set()}
+    state.update((key, {}) for key in _MAX_KEYS)
+    for name, commit in entries.items():
+        state["files"].update(commit.get("files", []))
+        state["replaced"].update(commit.get("replaced", []))
+        for key in _MAX_KEYS:
+            _merge_max(state[key], commit.get(key, {}))
+        parsed = _parse_commit_name(name)
+        if parsed is not None and parsed[0] in _SEQ_KEYS:
+            kind, key, seq = parsed
+            _merge_max(state[_SEQ_KEYS[kind]], {key: seq})
+    state["files"] -= state["replaced"]
+    return state
+
+
+def day_groups(
+    visible: set[str], namespace: str, table: str | None = None
+) -> dict[str, list[str]]:
+    """Visible files of a namespace (optionally one table), grouped by
+    day partition ``<namespace>/<table>/day=…``, each group sorted."""
+    groups: dict[str, list[str]] = {}
+    for rel in visible:
+        parts = rel.split("/")
+        if len(parts) == 4 and parts[0] == namespace and table in (None, parts[1]):
+            groups.setdefault("/".join(parts[:3]), []).append(rel)
+    for rels in groups.values():
+        rels.sort()
+    return groups
 
 
 def committed_stream_batch(
     cold_dir: Path, sink_id: str, batch_id: int
 ) -> bool:
-    """Has this (sink, batch) already committed? True when its commit
-    file exists OR a snapshot has folded it (snapshots record each
-    sink's max committed batch id; micro-batches commit in order, so
+    """Has this (sink, batch) already committed? True when the log
+    holds a commit of this sink with a batch id at least this one,
+    named or folded into a snapshot (micro-batches commit in order, so
     max implies all-below). The streaming sink's replay-skip check.
+    A listing that stays unstable raises (see read_commits): a wrong
+    False makes the sink unlink visible committed files, while an
+    exception just makes foreachBatch retry the micro-batch with every
+    committed file intact."""
+    batches = fold_commits(read_commits(cold_dir))["stream_batches"]
+    return batches.get(sink_id, -1) >= batch_id
 
-    A snapshot read can race a concurrent snapshot replacement (listed
-    file unlinked before read): answering False then would re-execute
-    a committed batch and unlink VISIBLE files, so a vanished-file
-    read retries the whole check. ADVICE r2: if retries exhaust
-    without a clean listing, this RAISES rather than answering False —
-    a wrong False makes write_batch unlink visible committed files,
-    while an exception just makes foreachBatch retry the micro-batch
-    with every committed file intact."""
-    cdir = Path(cold_dir) / COMMITS_DIR
-    for _ in range(10):
-        if (cdir / f"{sink_id}-{batch_id:09d}.json").exists():
-            return True
-        if not cdir.exists():
-            return False
-        retry = False
-        for p in cdir.glob("snapshot-*.json"):
-            try:
-                snap = json.loads(p.read_text())
-            except FileNotFoundError:
-                retry = True  # folded away mid-check; re-list
-                break
-            except (OSError, json.JSONDecodeError):
-                continue
-            if snap.get("stream_batches", {}).get(sink_id, -1) >= batch_id:
-                return True
-        if not retry:
-            return False
-    raise RuntimeError(
-        f"commit-log snapshot listing unstable after 10 retries for "
-        f"({sink_id}, batch {batch_id}); refusing to answer 'not "
-        f"committed' — retry the micro-batch"
+
+def open_stream_sink(cold_dir: Path, sink_id: str) -> None:
+    """Validate a streaming sink's id and mark ``cold_dir`` as a
+    commit-log directory before the sink's first batch. An empty id
+    could never fold into the snapshot's stream batches, breaking the
+    replay skip after compaction. Legacy parquet is adopted FIRST (a
+    sink can be the first commit-log writer to touch an upgraded dir),
+    then the marker is created: a crash before this sink's first
+    commit must not let a later engine adopt its uncommitted files."""
+    if not sink_id.strip():
+        raise ValueError("sink_id must be non-empty")
+    if sink_id.startswith(_RESERVED_SINK_PREFIXES):
+        raise ValueError(
+            f"sink_id {sink_id!r} collides with the engine's reserved "
+            "commit prefixes (flush/optimize/snapshot/legacy)"
+        )
+    adopt_legacy_layout(cold_dir)
+    (Path(cold_dir) / COMMITS_DIR).mkdir(parents=True, exist_ok=True)
+
+
+def stream_staging_dir(cold_dir: Path, sink_id: str, batch_id: int) -> Path:
+    """Where a micro-batch writes its parquet before commit_stream_batch
+    publishes it."""
+    return Path(cold_dir) / "_staging" / f"{sink_id}-{batch_id:09d}"
+
+
+def commit_stream_batch(
+    cold_dir: Path,
+    sink_id: str,
+    batch_id: int,
+    tables: list[tuple[str, str]],
+    cache: dict[str, dict] | None = None,
+) -> None:
+    """Publish one staged micro-batch: move each (namespace, table)'s
+    staged parquet to batch-id-deterministic names in the live layout
+    (invisible until the commit), atomically rename the batch's ONE
+    commit JSON, drop the staging dir, and fold the log (a flush-less
+    deployment must not grow it unboundedly either). A retry of a
+    half-moved batch first removes that batch's earlier moves, so no
+    duplicate can become visible."""
+    cold_dir = Path(cold_dir)
+    stage = stream_staging_dir(cold_dir, sink_id, batch_id)
+    rels: list[str] = []
+    for ns, table in tables:
+        dst_table = cold_dir / ns / table
+        if dst_table.exists():
+            for stale in dst_table.rglob(f"part-{stage.name}-*.parquet"):
+                stale.unlink()
+        staged = sorted((stage / ns / table).rglob("*.parquet"))
+        for k, f in enumerate(staged):
+            dst = (
+                dst_table
+                / f.parent.name  # day=YYYY-MM-DD
+                / f"part-{stage.name}-{k:05d}.parquet"
+            )
+            dst.parent.mkdir(parents=True, exist_ok=True)
+            os.replace(f, dst)
+            rels.append(str(dst.relative_to(cold_dir)))
+    _write_commit(
+        cold_dir,
+        commit_name("stream", sink_id, batch_id),
+        {"files": rels, "watermarks": {}},
     )
+    shutil.rmtree(stage, ignore_errors=True)
+    compact_commits(cold_dir, COMMIT_COMPACT_THRESHOLD, cache)
 
 
 def compact_commits(
@@ -226,104 +418,53 @@ def compact_commits(
 ) -> None:
     """Fold accumulated commits into one snapshot so the per-query
     commit listing stays O(1) across thousands of flushes AND
-    long-lived streaming sinks (both the engine's flush and the sink's
-    write_batch call this). Stream commits fold too: the snapshot
-    records each sink's max committed batch id (micro-batches commit
-    in order, so max means all-below), and the sink's replay-skip
-    check consults it alongside the file existence check.
+    long-lived streaming sinks (the engine's flush and optimize and the
+    sink's commit call this). The snapshot's payload is fold_commits'
+    state, so it records each namespace's highest flush/optimize id
+    and each sink's highest batch id.
 
     Safe against concurrent readers AND concurrent folds: the snapshot
     is renamed in before anything is unlinked, every reader unions
-    whatever set of files it lists (snapshot ⊇ merged), a commit file
-    another fold already consumed is skipped (its contents live in
-    that fold's snapshot, which this fold did not list and therefore
-    does not delete), and unlinks tolerate already-gone files."""
-    cdir = Path(cold_dir) / COMMITS_DIR
-    if not cdir.exists():
+    whatever set of files it lists (snapshot ⊇ merged), a commit
+    another fold consumed mid-listing makes read_commits re-list (and
+    then this fold merges that fold's snapshot), and unlinks tolerate
+    already-gone files."""
+    entries = read_commits(cold_dir, cache)
+    if not entries or len(entries) < threshold:
         return
-    mergeable = list(cdir.glob("*.json"))
-    if len(mergeable) < threshold:
-        return
-    files: set[str] = set()
-    replaced: set[str] = set()
-    watermarks: dict[str, int] = {}
-    flush_ids: dict[str, int] = {}
-    opt_ids: dict[str, int] = {}
-    stream_batches: dict[str, int] = {}
-    snap_id = 0
-    merged: list[Path] = []
-    for p in sorted(mergeable):
-        commit = (cache or {}).get(p.name)
-        if commit is None:
-            try:
-                commit = json.loads(p.read_text())
-            except (OSError, json.JSONDecodeError):
-                continue  # consumed by a concurrent fold; skip
-        merged.append(p)
-        files.update(commit.get("files", []))
-        replaced.update(commit.get("replaced", []))
-        for ns, oid in commit.get("opt_ids", {}).items():
-            opt_ids[ns] = max(opt_ids.get(ns, 0), oid)
-        for ns, seg in commit.get("watermarks", {}).items():
-            watermarks[ns] = max(watermarks.get(ns, -1), seg)
-        for ns, fid in commit.get("flush_ids", {}).items():
-            flush_ids[ns] = max(flush_ids.get(ns, 0), fid)
-        for sid, bid in commit.get("stream_batches", {}).items():
-            stream_batches[sid] = max(stream_batches.get(sid, -1), bid)
-        name = p.name.removesuffix(".json")
-        tail = name.rsplit("-", 1)[-1]
-        if name.startswith("flush-"):
-            ns = name[len("flush-") : -(len(tail) + 1)]
-            if tail.isdigit():
-                flush_ids[ns] = max(flush_ids.get(ns, 0), int(tail))
-        elif name.startswith("optimize-"):
-            ns = name[len("optimize-") : -(len(tail) + 1)]
-            if tail.isdigit():
-                opt_ids[ns] = max(opt_ids.get(ns, 0), int(tail))
-        elif name.startswith("snapshot-"):
-            sid_part = name.split("-")[1] if "-" in name else ""
-            if sid_part.isdigit():
-                snap_id = max(snap_id, int(sid_part))
-        elif not name.startswith("legacy"):  # a stream batch commit
-            sid = name[: -(len(tail) + 1)]
-            if tail.isdigit() and sid:
-                stream_batches[sid] = max(
-                    stream_batches.get(sid, -1), int(tail)
-                )
-    if not merged:
-        return
+    state = fold_commits(entries)
+    snap_id = max(
+        (
+            parsed[2]
+            for parsed in map(_parse_commit_name, entries)
+            if parsed is not None and parsed[0] == "snapshot"
+        ),
+        default=0,
+    )
     # writer-unique filename: two uncoordinated folds (engine flush +
     # streaming sink are separate threads/processes) must never
     # REPLACE each other's snapshot — a replaced snapshot whose source
     # commits were already unlinked would lose visibility. Unique
     # names make concurrent snapshots additive; the next fold merges
     # them into one.
-    snap = cdir / (
-        f"snapshot-{snap_id + 1:06d}-p{os.getpid()}-{next(_FOLD_SEQ)}.json"
-    )
-    # fold the rewrite subtraction eagerly (visible = files − replaced;
-    # a replaced name is never re-added, so subtracting early is safe)
-    # but KEEP the replaced names: vacuum needs them to find deletable
-    # physical files, and un-folded optimize commits must keep
-    # subtracting against older snapshots' file lists
-    atomic_write_json(
+    snap = f"snapshot-{snap_id + 1:06d}-p{os.getpid()}-{next(_FOLD_SEQ)}.json"
+    # the rewrite subtraction is folded eagerly (a replaced name is
+    # never re-added, so subtracting early is safe) but the replaced
+    # names are KEPT: vacuum needs them to find deletable physical
+    # files, and un-folded optimize commits must keep subtracting
+    # against older snapshots' file lists
+    _write_commit(
+        cold_dir,
         snap,
         {
-            "files": sorted(files - replaced),
-            "replaced": sorted(replaced),
-            "watermarks": watermarks,
-            "flush_ids": flush_ids,
-            "opt_ids": opt_ids,
-            "stream_batches": stream_batches,
+            **state,
+            "files": sorted(state["files"]),
+            "replaced": sorted(state["replaced"]),
         },
     )
-    if cache is not None:
-        cache[snap.name] = json.loads(snap.read_text())
-    for p in merged:
-        if p.name != snap.name:
-            p.unlink(missing_ok=True)
-            if cache is not None:
-                cache.pop(p.name, None)
+    for name in entries:
+        if name != snap:
+            (Path(cold_dir) / COMMITS_DIR / name).unlink(missing_ok=True)
 
 
 class TieredEngine(LynxEngine):
@@ -341,8 +482,6 @@ class TieredEngine(LynxEngine):
         auto_flush_age_s: float | None = None,
         auto_optimize_files: int | None = None,
     ) -> None:
-        import threading
-
         # set before super().__init__: replay consults the commit log
         self.cold_dir = Path(cold_dir)
         self.cold_dir.mkdir(parents=True, exist_ok=True)
@@ -380,7 +519,7 @@ class TieredEngine(LynxEngine):
         # every segment they touch against compaction) nor sit
         # non-durable-in-parquet forever. Checked by a daemon ticker
         # (period = age/4, floor 0.5 s) through the same
-        # _schedule_autoflush path, so the one-in-flight-per-
+        # _schedule path, so the one-in-flight-per-
         # namespace marker and the exactly-once flush contract are
         # shared with the row trigger.
         self.auto_flush_age_s = auto_flush_age_s
@@ -394,23 +533,20 @@ class TieredEngine(LynxEngine):
             auto_optimize_files = None
         self.auto_optimize_files = auto_optimize_files
         self._autoflush_lock = threading.Lock()
-        self._autoflush_pending: set[str] = set()
-        self._autooptimize_pending: set[str] = set()
+        #: (job, namespace) of every background job in flight
+        self._auto_pending: set[tuple[str, str]] = set()
         self._autoflush_stop = threading.Event()
         super().__init__(spark, wal_dir, max_segment_size, multi_table)
-        if auto_flush_rows is not None:
-            # WAL replay may have restored an over-watermark backlog
-            for ns in self.buffer.namespaces():
-                if self.buffer.row_count(ns) >= auto_flush_rows:
-                    self._schedule_autoflush(ns)
+        # WAL replay may have restored an over-watermark backlog, and a
+        # restart may land on a cold tier already over the file
+        # watermark (e.g. the process died between flush and pack)
+        for ns in self.buffer.namespaces():
+            self._schedule_if_due("flush", ns)
         if auto_optimize_files is not None:
-            # a restart may land on a cold tier already over the file
-            # watermark (e.g. the process died between flush and pack)
             with self._wal_lock:
                 committed = self._committed_files()
             for ns in {rel.split("/", 1)[0] for rel in committed}:
-                if self._over_optimize_watermark(ns, committed):
-                    self._schedule_autooptimize(ns)
+                self._schedule_if_due("optimize", ns)
         if auto_flush_age_s is not None:
             threading.Thread(
                 target=self._age_ticker,
@@ -418,97 +554,90 @@ class TieredEngine(LynxEngine):
                 daemon=True,
             ).start()
 
-    # -------------------------------------------------------- auto-flush
+    # ------------------------------------------- background flush/optimize
 
     def write(self, req) -> None:
         super().write(req)
-        n = self.auto_flush_rows
-        if n is not None and self.buffer.row_count(req.namespace) >= n:
-            self._schedule_autoflush(req.namespace)
+        self._schedule_if_due("flush", req.namespace)
 
-    def _schedule_autoflush(self, namespace: str) -> None:
-        """At most one in-flight background flush per namespace: the
+    def _schedule_if_due(self, job: str, namespace: str) -> None:
+        """Schedule a background ``job`` when its watermark is crossed:
+        the namespace's hot-row count for "flush", a (table, day)
+        partition's visible-file count for "optimize"."""
+        if job == "flush":
+            n = self.auto_flush_rows
+            due = n is not None and self.buffer.row_count(namespace) >= n
+        elif self.auto_optimize_files is None:
+            due = False  # no _wal_lock wait for a disabled watermark
+        else:
+            # the commit cache is only read and mutated under _wal_lock
+            with self._wal_lock:
+                due = self._over_optimize_watermark(namespace)
+        if due:
+            self._schedule(job, namespace)
+
+    def _schedule(self, job: str, namespace: str) -> None:
+        """At most one in-flight background job per (job, namespace): the
         pending marker is set before the thread starts and cleared
-        after flush() returns, and every write that still (or again)
-        sees an over-watermark count re-arms it. ADVICE r12: flush()
-        releases _wal_lock before the runner's ``finally`` clears the
-        marker, so a write landing in that window sees the marker set
-        and skips re-arming — the runner therefore re-checks the row
-        watermark AFTER clearing the marker and reschedules itself if
-        the namespace is (still or again) over, closing the
-        strand-without-a-flush window even when no age ticker runs."""
-        import threading
-
+        after the job returns, and every trigger that still (or again)
+        sees its watermark crossed re-arms it. A flush and a pack of
+        the same namespace may overlap in wall time — they serialize
+        on _wal_lock, not on the markers."""
         with self._autoflush_lock:
-            if namespace in self._autoflush_pending:
+            if (job, namespace) in self._auto_pending:
                 return
-            self._autoflush_pending.add(namespace)
+            self._auto_pending.add((job, namespace))
         threading.Thread(
-            target=self._autoflush_run,
-            args=(namespace,),
-            name=f"lynx-autoflush-{namespace}",
+            target=self._run_job,
+            args=(job, namespace),
+            name=f"lynx-auto{job}-{namespace}",
             daemon=True,
         ).start()
 
-    def _autoflush_run(self, namespace: str) -> None:
-        import sys
-
-        flushed = False
+    def _run_job(self, job: str, namespace: str) -> None:
         try:
-            self.flush(namespace)
-            flushed = True
-        except Exception as e:  # noqa: BLE001 — must clear the marker
-            print(f"auto-flush({namespace}) failed: {e!r}", file=sys.stderr)
+            if job == "flush":
+                self.flush(namespace)
+            else:
+                # min_files = the watermark itself: only over-watermark
+                # day partitions are rewritten, so a day that just
+                # crossed is packed to 1 file and then left alone until
+                # it crosses again — no churn on small days
+                self.optimize(namespace, min_files=self.auto_optimize_files)
+        except Exception:  # noqa: BLE001 — must clear the marker
+            # no reschedule: a FAILED job leaves its watermark crossed
+            # by definition, and rescheduling would spin a hot retry
+            # loop; the next write, flush or age tick re-arms it
+            log.exception("auto-%s(%s) failed", job, namespace)
+            return
         finally:
             with self._autoflush_lock:
-                self._autoflush_pending.discard(namespace)
-        # close the marker-clear race (see _schedule_autoflush): writes
-        # between flush() returning and the discard above saw the
-        # marker and skipped re-arming. Only on the success path — a
-        # FAILED flush leaves rows over the watermark by definition,
-        # and rescheduling then would spin a hot retry loop; failures
-        # keep the old contract (the next write or age tick re-arms).
-        if flushed:
-            n = self.auto_flush_rows
-            if n is not None and self.buffer.row_count(namespace) >= n:
-                self._schedule_autoflush(namespace)
+                self._auto_pending.discard((job, namespace))
+        # the job released _wal_lock before the marker was cleared, so
+        # a trigger landing in that window saw the marker and skipped
+        # re-arming: re-check after clearing, closing the
+        # strand-without-a-job window even when no age ticker runs
+        self._schedule_if_due(job, namespace)
 
     def autoflush_idle(self) -> bool:
         """True when no background flush is in flight (test/ops hook)."""
         with self._autoflush_lock:
-            return not self._autoflush_pending
+            return not any(job == "flush" for job, _ in self._auto_pending)
 
-    # ----------------------------------------------------- auto-optimize
+    def autooptimize_idle(self) -> bool:
+        """True when no background pack is in flight (test/ops hook)."""
+        with self._autoflush_lock:
+            return not any(job == "optimize" for job, _ in self._auto_pending)
 
-    def _over_optimize_watermark(
-        self, namespace: str, committed: set[str] | None = None
-    ) -> bool:
+    def _over_optimize_watermark(self, namespace: str) -> bool:
         """Does any (table, day) partition of the namespace hold ≥
         auto_optimize_files visible files? O(#committed files) over the
-        cached commit log — no filesystem walk."""
+        cached commit log — no filesystem walk. Caller holds _wal_lock."""
         k = self.auto_optimize_files
-        if k is None:
-            return False
-        if committed is None:
-            committed = self._committed_files()
-        counts: dict[str, int] = {}
-        for rel in committed:
-            parts = rel.split("/")
-            if len(parts) == 4 and parts[0] == namespace:
-                day_dir = "/".join(parts[:3])
-                counts[day_dir] = counts.get(day_dir, 0) + 1
-                if counts[day_dir] >= k:
-                    return True
-        return False
-
-    def _maybe_autooptimize(self, namespace: str) -> None:
-        """Called at the end of flush() (under _wal_lock, commit cache
-        warm): schedule a background pack if the flush pushed any day
-        partition over the file watermark."""
-        if self.auto_optimize_files is not None and (
-            self._over_optimize_watermark(namespace)
-        ):
-            self._schedule_autooptimize(namespace)
+        return k is not None and any(
+            len(rels) >= k
+            for rels in day_groups(self._committed_files(), namespace).values()
+        )
 
     def notify_external_commit(self, namespace: str) -> None:
         """File-count watermark check for commits this engine did NOT
@@ -516,80 +645,17 @@ class TieredEngine(LynxEngine):
         its own micro-batch thread, so a namespace fed exclusively by
         a sink never passes through flush() and (before r14) escaped
         the auto-optimize watermark until a manual /api/v1/optimize.
-        The sink calls this after each commit (streaming/ingest.py);
-        takes _wal_lock because the commit-cache refresh mutates
-        shared state, unlike the flush-path caller which already
-        holds it."""
-        if self.auto_optimize_files is None:
-            return
-        with self._wal_lock:
-            over = self._over_optimize_watermark(namespace)
-        if over:
-            self._schedule_autooptimize(namespace)
-
-    def _schedule_autooptimize(self, namespace: str) -> None:
-        """Same one-in-flight-per-namespace contract as
-        _schedule_autoflush, with its own pending set (a flush and a
-        pack of the same namespace may overlap in wall time — they
-        serialize on _wal_lock, not on the markers)."""
-        import threading
-
-        with self._autoflush_lock:
-            if namespace in self._autooptimize_pending:
-                return
-            self._autooptimize_pending.add(namespace)
-        threading.Thread(
-            target=self._autooptimize_run,
-            args=(namespace,),
-            name=f"lynx-autooptimize-{namespace}",
-            daemon=True,
-        ).start()
-
-    def _autooptimize_run(self, namespace: str) -> None:
-        import sys
-
-        packed = False
-        try:
-            # min_files = the watermark itself: only over-watermark
-            # day partitions are rewritten, so a day that just crossed
-            # is packed to 1 file and then left alone until it crosses
-            # again — no churn on small days
-            self.optimize(namespace, min_files=self.auto_optimize_files)
-            packed = True
-        except Exception as e:  # noqa: BLE001 — must clear the marker
-            print(
-                f"auto-optimize({namespace}) failed: {e!r}", file=sys.stderr
-            )
-        finally:
-            with self._autoflush_lock:
-                self._autooptimize_pending.discard(namespace)
-        # marker-clear race, same shape as _autoflush_run: flushes
-        # landing between optimize() returning and the discard above
-        # saw the marker and skipped re-arming (success path only —
-        # a persistent failure must not spin a hot retry loop). The
-        # commit-log read takes _wal_lock: the cache is only mutated
-        # under it everywhere else.
-        if packed:
-            with self._wal_lock:
-                over = self._over_optimize_watermark(namespace)
-            if over:
-                self._schedule_autooptimize(namespace)
-
-    def autooptimize_idle(self) -> bool:
-        """True when no background pack is in flight (test/ops hook)."""
-        with self._autoflush_lock:
-            return not self._autooptimize_pending
+        The sink calls this after each commit (streaming/ingest.py)."""
+        self._schedule_if_due("optimize", namespace)
 
     def _age_ticker(self) -> None:
-        import time
-
         age = float(self.auto_flush_age_s)
         period = max(0.5, age / 4.0)
         while not self._autoflush_stop.wait(period):
             for ns in self.buffer.namespaces():
                 a = self.buffer.oldest_insert_age(ns)
                 if a is not None and a >= age:
-                    self._schedule_autoflush(ns)
+                    self._schedule("flush", ns)
 
     def close_autoflush(self) -> None:
         """Stop the age ticker (tests; daemon threads die with the
@@ -599,92 +665,38 @@ class TieredEngine(LynxEngine):
     # ------------------------------------------------------- commit log
 
     def _load_commits(self) -> dict[str, dict]:
-        """All committed entries (cached: commit files are immutable;
-        only new filenames are read). The streaming sink may add
-        commits — and its compact_commits may FOLD them away —
-        concurrently: a commit unlinked between the glob and the read
-        (FileNotFoundError) restarts the listing, which then sees the
-        fold's snapshot (renamed in before its sources are unlinked,
-        so a re-list always sees a superset). ADVICE r2: never
-        silently skip a vanished commit — an under-approximated
-        committed set would let _gc_flush_orphans delete committed
-        files. Stale cache entries for folded-away commits are
-        harmless: their contents are a subset of the snapshot's."""
-        cdir = self.cold_dir / COMMITS_DIR
-        if cdir.exists():
-            for _ in range(50):
-                try:
-                    for p in sorted(cdir.glob("*.json")):
-                        if p.name not in self._commit_cache:
-                            self._commit_cache[p.name] = json.loads(
-                                p.read_text()
-                            )
-                    break
-                except FileNotFoundError:
-                    continue  # folded away mid-listing; re-list
-            else:
-                raise RuntimeError(
-                    "commit log listing unstable after 50 retries; "
-                    "refusing to return a possibly-partial committed set"
-                )
-        return self._commit_cache
+        """All committed entries, by file name (read_commits over this
+        engine's cache)."""
+        return read_commits(self.cold_dir, self._commit_cache)
+
+    def _commit_state(self) -> dict:
+        """The folded commit log (fold_commits)."""
+        return fold_commits(self._load_commits())
 
     def _committed_files(self) -> set[str]:
-        """VISIBLE files: every committed file minus every file a
-        rewrite (optimize) commit replaced. The subtraction is
-        order-free because file names are writer-unique and never
-        reused: a name in any ``replaced`` list is permanently dead."""
-        files: set[str] = set()
-        replaced: set[str] = set()
-        for commit in self._load_commits().values():
-            files.update(commit.get("files", []))
-            replaced.update(commit.get("replaced", []))
-        return files - replaced
+        """VISIBLE files (see fold_commits)."""
+        return self._commit_state()["files"]
 
     def _replaced_files(self) -> set[str]:
         """Tombstoned files: replaced by an optimize rewrite, invisible
         to queries, but retained on disk until ``vacuum`` — an
         in-flight query planned before the rewrite may still hold them
         in its pinned file list."""
-        return {
-            rel
-            for commit in self._load_commits().values()
-            for rel in commit.get("replaced", [])
-        }
-
-    def _protected_files(self) -> set[str]:
-        """Files the orphan GC must never touch: visible ∪ tombstoned
-        (tombstones die via vacuum, not via the GC)."""
-        files: set[str] = set()
-        for commit in self._load_commits().values():
-            files.update(commit.get("files", []))
-            files.update(commit.get("replaced", []))
-        return files
+        return self._commit_state()["replaced"]
 
     def _watermarks(self) -> dict[str, int]:
         """Per-namespace flush watermark: records of ns in WAL segments
         with id < watermark are already committed to parquet."""
-        out: dict[str, int] = {}
-        for commit in self._load_commits().values():
-            for ns, seg_id in commit.get("watermarks", {}).items():
-                out[ns] = max(out.get(ns, -1), seg_id)
-        return out
+        return self._commit_state()["watermarks"]
 
     def _next_flush_id(self, namespace: str) -> int:
-        highest = 0
-        for name, commit in self._load_commits().items():
-            if name.startswith(f"flush-{namespace}-"):
-                tail = name.removesuffix(".json").rsplit("-", 1)[-1]
-                if tail.isdigit():
-                    highest = max(highest, int(tail))
-            # snapshots remember the highest id they folded in
-            highest = max(
-                highest, commit.get("flush_ids", {}).get(namespace, 0)
-            )
-        return highest + 1
+        return self._commit_state()["flush_ids"].get(namespace, 0) + 1
 
-    #: compact the commit log once this many flush commits accumulate
-    COMMIT_COMPACT_THRESHOLD = 64
+    def _next_optimize_id(self, namespace: str) -> int:
+        return self._commit_state()["opt_ids"].get(namespace, 0) + 1
+
+    #: compact the commit log once this many commit files accumulate
+    COMMIT_COMPACT_THRESHOLD = COMMIT_COMPACT_THRESHOLD
 
     def _maybe_compact_commits(self) -> None:
         """Engine-side trigger for the shared commit-log compaction
@@ -696,27 +708,17 @@ class TieredEngine(LynxEngine):
     # ------------------------------------------------------------ replay
 
     def _replay_wal(self, wal_dir: Path) -> tuple[int, list[int]]:
-        """Watermark-aware WAL replay: skip records the commit log
-        proves are in parquet (crash-after-commit recovery), and sweep
-        compaction temp files a crash may have left."""
+        """Watermark-aware WAL replay: sweep compaction temp files a
+        crash may have left, then skip records the commit log proves
+        are in parquet (crash-after-commit recovery)."""
+        for tmp in Path(wal_dir).glob("*.compact"):
+            tmp.unlink()  # crashed mid-compaction; original intact
         watermarks = self._watermarks()
-        highest = 0
-        observed: list[int] = []
-        for entry in Path(wal_dir).iterdir():
-            if entry.is_dir():
-                continue
-            if entry.name.endswith(".compact"):
-                entry.unlink()  # crashed mid-compaction; original intact
-                continue
-            segment_id = int(entry.stem)
-            observed.append(segment_id)
-            highest = max(highest, segment_id)
-            for req in read_segment(entry):
-                wm = watermarks.get(req.namespace)
-                if wm is not None and segment_id < wm:
-                    continue  # already durable in the cold tier
-                self.buffer.insert(req)
-        return highest, observed
+        return Wal.replay(
+            wal_dir,
+            self.buffer,
+            skip=lambda seg, req: seg < watermarks.get(req.namespace, -1),
+        )
 
     # ------------------------------------------------------------ flush
 
@@ -740,7 +742,9 @@ class TieredEngine(LynxEngine):
             tables = self.buffer.tables(namespace)  # snapshot, not pop
             if tables is None:
                 return 0
-            self._gc_flush_orphans(namespace, self._protected_files())
+            state = self._commit_state()
+            # visible ∪ tombstoned: tombstones die via vacuum, not the GC
+            self._gc_flush_orphans(namespace, state["files"] | state["replaced"])
             self.wal.rotate()
             watermark = self.wal.active_segment.id
             fid = self._next_flush_id(namespace)
@@ -753,14 +757,16 @@ class TieredEngine(LynxEngine):
                     )
                     rows += n
                     rels.append(str(final.relative_to(self.cold_dir)))
-            atomic_write_json(
-                self.cold_dir / COMMITS_DIR / f"flush-{namespace}-{fid:06d}.json",
+            _write_commit(
+                self.cold_dir,
+                commit_name("flush", namespace, fid),
                 {"files": rels, "watermarks": {namespace: watermark}},
             )
             self.buffer.clear_namespace(namespace)
             self._compact_wal(drop_namespace=namespace)
             self._maybe_compact_commits()
-            self._maybe_autooptimize(namespace)
+            if self._over_optimize_watermark(namespace):
+                self._schedule("optimize", namespace)
             return rows
 
     def _write_partition(
@@ -824,18 +830,6 @@ class TieredEngine(LynxEngine):
 
     # --------------------------------------------------------- optimize
 
-    def _next_optimize_id(self, namespace: str) -> int:
-        highest = 0
-        for name, commit in self._load_commits().items():
-            if name.startswith(f"optimize-{namespace}-"):
-                tail = name.removesuffix(".json").rsplit("-", 1)[-1]
-                if tail.isdigit():
-                    highest = max(highest, int(tail))
-            highest = max(
-                highest, commit.get("opt_ids", {}).get(namespace, 0)
-            )
-        return highest + 1
-
     def optimize(self, namespace: str, table: str | None = None, min_files: int = 2) -> int:
         """Bin-pack small committed files: rewrite every day partition
         holding ≥ ``min_files`` visible files into one file, and commit
@@ -867,15 +861,7 @@ class TieredEngine(LynxEngine):
         timestamp so the packed file's row-group min/max stats support
         range pruning within the day."""
         with self._wal_lock:
-            visible = self._committed_files()
-            groups: dict[str, list[str]] = {}
-            for rel in sorted(visible):
-                parts = rel.split("/")
-                if len(parts) != 4 or parts[0] != namespace:
-                    continue
-                if table is not None and parts[1] != table:
-                    continue
-                groups.setdefault("/".join(parts[:3]), []).append(rel)
+            groups = day_groups(self._committed_files(), namespace, table)
             fid = self._next_optimize_id(namespace)
             new_rels: list[str] = []
             old_rels: list[str] = []
@@ -897,10 +883,9 @@ class TieredEngine(LynxEngine):
                 seq += 1
             if not old_rels:
                 return 0
-            atomic_write_json(
-                self.cold_dir
-                / COMMITS_DIR
-                / f"optimize-{namespace}-{fid:06d}.json",
+            _write_commit(
+                self.cold_dir,
+                commit_name("optimize", namespace, fid),
                 {"files": new_rels, "replaced": old_rels},
             )
             self._maybe_compact_commits()
@@ -1008,29 +993,18 @@ class TieredEngine(LynxEngine):
                 for rel in committed
                 if rel.split("/", 2)[0] == namespace
             }
-            candidates = set(tables) | cold_tables
-            if table_name is not None and table_name not in candidates:
+            names = self._resolve_tables(
+                sql, table_name, set(tables) | cold_tables
+            )
+            if not names:
                 return None  # unknown in both tiers -> 404 (main.rs:83)
-            if self.multi_table:
-                names = referenced_tables(sql, candidates)
-                if table_name is not None:
-                    names |= {table_name}
-                if not names:
-                    return None
-            else:
-                names = {table_name}
             views = {
                 name: self._tiered_table_df(
                     namespace, name, tables, sql, committed
                 )
                 for name in sorted(names)
             }
-        with self._query_lock:
-            for name, df in views.items():
-                df.createOrReplaceTempView(name)
-            if self.multi_table:
-                self._drop_stale_views(keep=names)
-            return self.spark.sql(sql)
+        return self._run_sql(sql, views)
 
     def _tiered_table_df(
         self,
@@ -1044,11 +1018,7 @@ class TieredEngine(LynxEngine):
         at least one tier has it)."""
         hot = None
         if table_name in tables:
-            partitions = tables[table_name]
-            batch = measurements_to_arrow(
-                [partitions[day] for day in select_days(partitions, sql)]
-            )
-            hot = self.spark.createDataFrame(batch)
+            hot = self._hot_frame(tables[table_name], sql)
             if self.expose_day:
                 # day as DATE to line up with the inferred type of
                 # the cold tier's hive partition column

@@ -15,7 +15,10 @@ Pipeline:
           the buffer routes out-of-order writes into day partitions), or
       (b) foreachBatch append into the SAME date-partitioned parquet
           layout the cold tier uses, so batch queries over
-          <cold>/<namespace>/<table>/day=... see streamed data.
+          <cold>/<namespace>/<table>/day=... see streamed data. The
+          commit log's names and payloads are sources/coldtier.py's:
+          this module only stages each micro-batch's parquet and calls
+          it to publish and commit.
 """
 
 from __future__ import annotations
@@ -212,8 +215,8 @@ def stream_to_cold_tier(
     to many (namespace, table) directories.
 
     Delivery is EXACTLY-ONCE across micro-batch replays via the cold
-    tier's commit log (sources/coldtier.py module docstring): each
-    batch writes its output to a staging directory, moves the files to
+    tier's commit log: each batch writes its output to a staging
+    directory, and ``coldtier.commit_stream_batch`` moves the files to
     batch-id-deterministic names (invisible — TieredEngine only reads
     committed files), then atomically renames ONE commit JSON keyed by
     (sink_id, batch_id). A replayed batch whose commit exists is
@@ -221,6 +224,8 @@ def stream_to_cold_tier(
     same deterministic names before committing, so no duplicate can
     become visible. ``sink_id`` must be unique per concurrent stream
     into the same cold dir (it namespaces batch ids and file names).
+    Commit and file names, payloads and the sink ids reserved for the
+    engine live in sources/coldtier.py, with the rest of the format.
 
     ``engine``: optional TieredEngine sharing this cold dir. When set,
     each committed batch calls ``engine.notify_external_commit(ns)``
@@ -230,45 +235,21 @@ def stream_to_cold_tier(
     unboundedly until a manual /api/v1/optimize.
 
     Returns the StreamingQuery (caller controls trigger/termination)."""
-    import os
-    import shutil
-
     from lynx_spark.sources.coldtier import (
-        COMMITS_DIR,
-        adopt_legacy_layout,
-        atomic_write_json,
+        commit_stream_batch,
         committed_stream_batch,
-        compact_commits,
+        open_stream_sink,
+        stream_staging_dir,
     )
 
-    # "flush"/"snapshot"/"legacy" prefixes are the engine's commit
-    # namespace (and the flush orphan GC deletes uncommitted
-    # part-flush* files, so a colliding sink id would lose data); an
-    # empty id could never fold into snapshot stream_batches, breaking
-    # replay-skip after compaction
-    if not sink_id.strip():
-        raise ValueError("sink_id must be non-empty")
-    if sink_id.startswith(("flush", "snapshot", "legacy", "opt", "optimize")):
-        raise ValueError(
-            f"sink_id {sink_id!r} collides with the engine's reserved "
-            "commit prefixes (flush/optimize/snapshot/legacy)"
-        )
-    cold_dir = Path(cold_dir)
-    # adopt any pre-commit-log parquet FIRST (a sink can be the first
-    # commit-log writer to touch an upgraded dir), then create the
-    # managed-directory marker: a crash before this sink's first
-    # commit must not let a later engine adopt the uncommitted files
-    # as legacy data
-    adopt_legacy_layout(cold_dir)
-    (cold_dir / COMMITS_DIR).mkdir(parents=True, exist_ok=True)
+    open_stream_sink(cold_dir, sink_id)
+    #: this sink's commit-log cache (commit files are immutable)
+    commits: dict[str, dict] = {}
 
     def write_batch(batch: DataFrame, batch_id: int) -> None:
-        commit_path = (
-            cold_dir / COMMITS_DIR / f"{sink_id}-{batch_id:09d}.json"
-        )
         if committed_stream_batch(cold_dir, sink_id, batch_id):
             return  # replayed batch already committed: exactly-once
-        stage = cold_dir / "_staging" / f"{sink_id}-{batch_id:09d}"
+        stage = stream_staging_dir(cold_dir, sink_id, batch_id)
         rows = batch.withColumn("day", F.to_date("ts")).persist()
         try:
             # fan out per namespace/table so the directory layout
@@ -309,34 +290,7 @@ def stream_to_cold_tier(
                 out.write.mode("overwrite").partitionBy("day").parquet(
                     str(stage / ns / table)
                 )
-            # move staged files to deterministic batch-keyed names in
-            # the live layout (invisible until the commit below)
-            rels: list[str] = []
-            for ns, table in pairs:
-                dst_table = cold_dir / ns / table
-                if dst_table.exists():
-                    # invisible leftovers of a half-moved earlier
-                    # attempt of THIS batch: remove before re-moving
-                    for stale in dst_table.rglob(
-                        f"part-{sink_id}-{batch_id:09d}-*.parquet"
-                    ):
-                        stale.unlink()
-                staged = sorted((stage / ns / table).rglob("*.parquet"))
-                for k, f in enumerate(staged):
-                    dst = (
-                        dst_table
-                        / f.parent.name  # day=YYYY-MM-DD
-                        / f"part-{sink_id}-{batch_id:09d}-{k:05d}.parquet"
-                    )
-                    dst.parent.mkdir(parents=True, exist_ok=True)
-                    os.replace(f, dst)
-                    rels.append(str(dst.relative_to(cold_dir)))
-            atomic_write_json(commit_path, {"files": rels, "watermarks": {}})
-            shutil.rmtree(stage, ignore_errors=True)
-            # sink-side fold: a flush-less deployment must not grow
-            # the commit log unboundedly either (concurrent-fold safe:
-            # writer-unique snapshot names, see compact_commits)
-            compact_commits(cold_dir, threshold=64)
+            commit_stream_batch(cold_dir, sink_id, batch_id, pairs, commits)
             if engine is not None:
                 # file-count watermark for flush-less namespaces: the
                 # engine never sees this commit through flush(), so

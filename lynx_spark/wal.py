@@ -33,7 +33,7 @@ from __future__ import annotations
 import io
 import struct
 from pathlib import Path
-from typing import BinaryIO
+from typing import BinaryIO, Callable
 
 from lynx_spark.buffer import MemBuffer
 from lynx_spark.model import WriteRequest
@@ -179,10 +179,16 @@ class Wal:
         self.active_segment.close()
 
     @staticmethod
-    def replay(directory: str | Path, buffer: MemBuffer) -> tuple[int, list[int]]:
+    def replay(
+        directory: str | Path,
+        buffer: MemBuffer,
+        skip: Callable[[int, WriteRequest], bool] | None = None,
+    ) -> tuple[int, list[int]]:
         """Replay every segment in the directory into the buffer;
         returns (highest observed id, all observed ids)
-        (wal.rs:276-296). Skips subdirectories (wal.rs:285-287)."""
+        (wal.rs:276-296). Skips subdirectories (wal.rs:285-287), and
+        the records for which ``skip(segment_id, record)`` is true (a
+        durable tier that already holds them)."""
         directory = Path(directory)
         highest = 0
         observed: list[int] = []
@@ -192,7 +198,9 @@ class Wal:
             segment_id = int(entry.stem)  # raises like the reference's parse
             observed.append(segment_id)
             highest = max(highest, segment_id)
-            _replay_segment(entry, buffer)
+            for req in read_segment(entry):
+                if skip is None or not skip(segment_id, req):
+                    buffer.insert(req)
         return highest, observed
 
 
@@ -221,8 +229,3 @@ def read_segment(path: Path):
             if req is None:
                 break
             yield req
-
-
-def _replay_segment(path: Path, buffer: MemBuffer) -> None:
-    for req in read_segment(path):
-        buffer.insert(req)

@@ -63,7 +63,7 @@ DAY_US = 86_400_000_000
 def main() -> None:
     from lynx_spark.model import WriteRequest
     from lynx_spark.session import get_spark
-    from lynx_spark.sources.coldtier import TieredEngine
+    from lynx_spark.sources.coldtier import TieredEngine, day_groups
 
     spark = get_spark("lynx_soak")
     spark.sparkContext.setLogLevel("ERROR")
@@ -202,13 +202,11 @@ def main() -> None:
     def visible_day_counts() -> dict[str, int]:
         with eng._wal_lock:
             committed = eng._committed_files()
-        out: dict[str, int] = {}
-        for rel in committed:
-            parts = rel.split("/")
-            if len(parts) == 4:
-                key = "/".join(parts[:3])
-                out[key] = out.get(key, 0) + 1
-        return out
+        return {
+            day: len(rels)
+            for ns in ("burst", "trickle")
+            for day, rels in day_groups(committed, ns).items()
+        }
 
     def sampler() -> None:
         tables = {"burst": ["cpu", "mem"], "trickle": ["sensor"]}
@@ -320,39 +318,14 @@ def main() -> None:
 
     day_counts = visible_day_counts()
     cdir = Path(tmp) / "cold" / "_commits"
-    commit_kinds = {"flush": 0, "optimize": 0, "snapshot": 0}
-    for p in cdir.glob("*.json"):
-        for k in commit_kinds:
-            if p.name.startswith(k):
-                commit_kinds[k] += 1
-    # snapshots fold commits away; recover totals from the fold.
-    # Per-namespace counting (r13 ADVICE: a global flush-*.json count
-    # let trickle flushes satisfy the burst-labeled metric): a
-    # namespace's flush count is max(files named flush-{ns}-*, the
-    # folded flush_ids[ns] watermark).
+    # Per-namespace counting (r13 ADVICE: a global flush commit count
+    # let trickle flushes satisfy the burst-labeled metric): flush ids
+    # run 1, 2, ... per namespace and survive snapshot folds, so a
+    # namespace's flush count is its highest committed flush id.
     with eng._wal_lock:
-        commits = eng._load_commits()
-    flushes_per_ns = {}
-    for ns in ("burst", "trickle"):
-        n_files = sum(
-            1 for p in cdir.glob(f"flush-{ns}-*.json")
-        )
-        folded = max(
-            (
-                c.get("flush_ids", {}).get(ns, 0)
-                for c in commits.values()
-            ),
-            default=0,
-        )
-        flushes_per_ns[ns] = max(n_files, folded)
-    folded_flush = max(
-        (
-            c.get("flush_ids", {}).get(ns, 0)
-            for c in commits.values()
-            for ns in ("burst", "trickle")
-        ),
-        default=0,
-    )
+        flushes_per_ns = {
+            ns: eng._next_flush_id(ns) - 1 for ns in ("burst", "trickle")
+        }
     n_flushes = flushes_per_ns["burst"]
 
     result = {
@@ -379,12 +352,12 @@ def main() -> None:
         <= 2 * AUTO_OPTIMIZE_FILES,
         "wal_segments_left": len(list((Path(tmp) / "wal").glob("*.wal"))),
         "commit_files_left": len(list(cdir.glob("*.json"))),
-        "folded_flush_watermark": folded_flush,
+        "folded_flush_watermark": max(flushes_per_ns.values()),
         "errors": errors[:20],
         # ok covers EVERY documented invariant (r13 review finding:
         # the bound flags were computed but excluded, so a run whose
-        # background flushes/packs all silently failed — they print
-        # to stderr, not to `errors` — could still read ok:true; the
+        # background flushes/packs all silently failed — they are
+        # logged, not added to `errors` — could still read ok:true; the
         # bounds are exactly what such a failure violates). n_flushes
         # > 0 additionally proves the background path actually ran.
         "ok": (

@@ -791,6 +791,98 @@ def test_optimize_scopes_to_table_and_min_files(spark, tmp_path):
     assert eng.optimize("ns", table="mem") == 2
 
 
+def test_commit_log_state_pinned_across_fold_and_restart(spark, tmp_path):
+    """The commit-log state (visible files, tombstones, watermarks,
+    stream-batch answers) is the same before and after a full fold and
+    after a restart, with namespace ``a`` a dash-prefix of ``a-b``; no
+    flush or optimize data file name is ever written twice."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from lynx_spark.sources.coldtier import (
+        atomic_write_json,
+        committed_stream_batch,
+        compact_commits,
+    )
+
+    cold = tmp_path / "cold"
+    eng = _restart(spark, tmp_path)
+    for i in range(3):
+        _write(eng, f"a{i}", i + 1, ns="a")
+        eng.flush("a")
+    for i in range(4):
+        _write(eng, f"ab{i}", i + 1, ns="a-b")
+        eng.flush("a-b")
+    assert eng.optimize("a") == 3
+    _write(eng, "hot", 9, ns="a")  # stays in the hot tier
+    # one stream-batch commit in the on-disk format the sink writes
+    day = cold / "a-b/cpu/day=1970-01-01"
+    pq.write_table(
+        pa.table(
+            {
+                "timestamp": pa.array([7], type=pa.timestamp("us")),
+                "value": pa.array(["s0"], type=pa.string()),
+            }
+        ),
+        day / "part-sink-000000000-00000.parquet",
+    )
+    atomic_write_json(
+        cold / "_commits/sink-000000000.json",
+        {
+            "files": ["a-b/cpu/day=1970-01-01/part-sink-000000000-00000.parquet"],
+            "watermarks": {},
+        },
+    )
+
+    def state(e):
+        return {
+            "visible": e._committed_files(),
+            "tombstones": e._replaced_files(),
+            "watermarks": e._watermarks(),
+            "batches": [
+                committed_stream_batch(cold, sid, bid)
+                for sid, bid in (("sink", 0), ("sink", 1), ("other", 0))
+            ],
+            "rows": {
+                ns: sorted(
+                    r["value"]
+                    for r in e.query(ns, "SELECT * FROM cpu").collect()
+                )
+                for ns in ("a", "a-b")
+            },
+        }
+
+    before = state(eng)
+    assert before["batches"] == [True, False, False]
+    assert before["rows"] == {
+        "a": ["a0", "a1", "a2", "hot"],
+        "a-b": ["ab0", "ab1", "ab2", "ab3", "s0"],
+    }
+    assert len(before["tombstones"]) == 3
+    assert set(before["watermarks"]) == {"a", "a-b"}
+    compact_commits(cold, threshold=1)
+    assert [p.name[:9] for p in (cold / "_commits").glob("*.json")] == [
+        "snapshot-"
+    ]
+    assert state(eng) == before
+    eng.wal.close()
+    eng = _restart(spark, tmp_path)
+    assert state(eng) == before
+
+    def data_files():
+        return {str(p.relative_to(cold)) for p in cold.rglob("part-*.parquet")}
+
+    for ns in ("a", "a-b", "a"):
+        seen = data_files()
+        _write(eng, f"{ns}-new", 2, ns=ns)
+        eng.flush(ns)
+        assert len(data_files() - seen) == 1, ns  # a fresh name
+        seen = data_files()
+        assert eng.optimize(ns) > 0
+        assert len(data_files() - seen) == 1, ns
+    eng.wal.close()
+
+
 # ------------------------------------------------------------ auto-flush
 
 
@@ -831,6 +923,48 @@ def test_autoflush_watermark_fires_without_http(spark, tmp_path):
     df = eng.query("ns", "SELECT * FROM cpu")
     vals = sorted(int(r["value"]) for r in df.collect())
     assert vals == list(range(100))
+
+
+def test_autoflush_failure_logs_traceback_and_rearms(
+    spark, tmp_path, caplog
+):
+    """A background flush that raises logs its traceback through
+    ``logging``, clears its pending marker without retrying, and the
+    next write over the watermark arms the flush again."""
+    import logging
+    import types
+
+    eng = TieredEngine(
+        spark,
+        tmp_path / "wal",
+        tmp_path / "cold",
+        max_segment_size=1024,
+        auto_flush_rows=2,
+    )
+    calls = []
+
+    def flush_failing_once(self, namespace):
+        calls.append(namespace)
+        if len(calls) == 1:
+            raise OSError("disk full")
+        return TieredEngine.flush(self, namespace)
+
+    eng.flush = types.MethodType(flush_failing_once, eng)
+    with caplog.at_level(logging.ERROR):
+        _write(eng, "0", 0)
+        _write(eng, "1", 1)  # crosses the watermark: the flush fails
+        _await_autoflush(eng)
+    assert calls == ["ns"]  # a failure is not retried in a hot loop
+    assert "auto-flush(ns) failed" in caplog.text
+    assert "Traceback" in caplog.text and "disk full" in caplog.text
+    assert eng.buffer.row_count("ns") == 2
+    _write(eng, "2", 2)  # still over the watermark: re-armed
+    _await_autoflush(eng)
+    assert calls == ["ns", "ns"]
+    assert eng.buffer.tables("ns") is None
+    vals = sorted(r["value"] for r in eng.query("ns", "SELECT * FROM cpu").collect())
+    assert vals == ["0", "1", "2"]
+    eng.wal.close()
 
 
 def test_autoflush_concurrent_writes_exactly_once(spark, tmp_path):
