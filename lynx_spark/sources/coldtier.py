@@ -167,6 +167,16 @@ _COMMIT_ERA_FILE = re.compile(
     r"|part-.+-\d{9}-\d{5}\.parquet$"
 )
 
+#: the flush GC's name rules (_gc_flush_orphans): engine temp files
+#: are always orphans, engine data files unless committed. The
+#: "flush" prefix is reserved, so any suffix is the engine's; the
+#: opt/m forms match their exact width only, so a streaming sink's
+#: part-<sink>- files never do.
+_GC_TMP = re.compile(r"\.tmp-flush.*|\.tmp-opt\d{6}(-\d{5})?|\.tmp-m\d{6}", re.S)
+_GC_DATA = re.compile(
+    r"part-flush.*\.parquet|part-(opt|m)\d{6}-\d{5}\.parquet", re.S
+)
+
 
 def adopt_legacy_layout(cold_dir: Path) -> None:
     """Adopt a cold directory written before the commit log existed:
@@ -798,35 +808,16 @@ class TieredEngine(LynxEngine):
         (part-<sink>-*, sink ids validated to never start with 'flush'
         or 'opt') are the streaming sink's to manage."""
         ns_dir = self.cold_dir / namespace
-        if not ns_dir.exists():
-            return
-        for p in ns_dir.rglob("part-flush*.parquet"):
-            if str(p.relative_to(self.cold_dir)) not in protected:
-                p.unlink()
-        for p in ns_dir.rglob(".tmp-flush*"):
-            p.unlink()
-        for p in ns_dir.rglob("part-opt*.parquet"):
-            if (
-                re.fullmatch(r"part-opt\d{6}-\d{5}\.parquet", p.name)
-                and str(p.relative_to(self.cold_dir)) not in protected
-            ):
-                p.unlink()
-        for p in ns_dir.rglob(".tmp-opt*"):
-            if re.fullmatch(r"\.tmp-opt\d{6}(-\d{5})?", p.name):
-                p.unlink()
-        # one-time sweep of the pre-rename flush patterns (part-mNNNNNN
-        # / .tmp-mNNNNNN): equally engine-owned, never visible, and no
-        # longer produced — the exact-width match cannot touch a
-        # streaming sink's part-<sink>- files
-        for p in ns_dir.rglob("part-m*.parquet"):
-            if (
-                re.fullmatch(r"part-m\d{6}-\d{5}\.parquet", p.name)
-                and str(p.relative_to(self.cold_dir)) not in protected
-            ):
-                p.unlink()
-        for p in ns_dir.rglob(".tmp-m*"):
-            if re.fullmatch(r"\.tmp-m\d{6}", p.name):
-                p.unlink()
+        # one walk; the pre-rename part-mNNNNNN / .tmp-mNNNNNN flush
+        # names are equally engine-owned and never visible
+        for dirpath, _, names in os.walk(ns_dir):
+            for name in names:
+                if _GC_TMP.fullmatch(name):
+                    os.unlink(os.path.join(dirpath, name))
+                elif _GC_DATA.fullmatch(name):
+                    p = Path(dirpath, name)
+                    if str(p.relative_to(self.cold_dir)) not in protected:
+                        p.unlink()
 
     # --------------------------------------------------------- optimize
 

@@ -12,20 +12,39 @@ actually runs: the store grows O(distinct documents), each batch costs
 O(batch) plus one anti-join (exact tier) or one bipartite band join
 (near tier) against the store — never a rescan of the corpus.
 
-Exactly-once across micro-batch replays, without the cold tier's
-commit machinery (this sink owns its whole directory, so it can be
-simpler): every batch writes to batch-id-keyed subdirectories with
-``mode=overwrite`` (a replayed batch rebuilds exactly its own files)
-and then atomically renames a marker JSON. Readers — including the
-NEXT batch loading the store — only read marker-committed batch
-directories, so a half-written replay attempt is invisible
-everywhere, not just inside the stream.
+Every operator here is a per-batch ``body`` run by ONE exactly-once
+micro-batch protocol (``_exactly_once``), without the cold tier's
+commit machinery (each store owns its whole directory, so it can be
+simpler):
+
+1. bind the store to its checkpoint lineage once, at start
+   (``<store>/_lineage.json``; see ``_bind_lineage``);
+2. skip a ``batch_id`` that already has a marker — a replayed, fully
+   committed batch is a no-op;
+3. run the body: it writes ``<store>/<family>/batch=NNNNNNNNN``
+   directories with ``mode=overwrite`` (a replayed, uncommitted batch
+   rebuilds exactly its own files) and returns the marker payload;
+4. atomically rename the marker ``<store>/_commits/bNNNNNNNNN.json``;
+5. run the operator's post-commit step, if any (carried-state
+   promotion, snapshot retention) — strictly after the marker lands;
+6. start the ``foreachBatch`` query with the caller's
+   ``checkpointLocation`` and an ``availableNow`` trigger, and return
+   it.
+
+Readers — including the NEXT batch loading the store — only read
+marker-committed batch directories, so a half-written replay attempt
+is invisible everywhere, not just inside the stream. DELTA stores
+(each batch dir holds that batch's additions) are read as the union of
+committed dirs (``read_store_snapshot``); FULL-snapshot stores (each
+batch dir holds the whole state) as the newest committed dir
+(``_latest_snapshot``).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 from pathlib import Path
 
 import pandas as pd
@@ -118,16 +137,39 @@ def _bind_lineage(root: Path, checkpoint_dir: str | Path) -> None:
     os.replace(tmp, lineage)
 
 
-def _exact_dedup_commit(
+def _exactly_once(stream, store_dir, checkpoint_dir, body, after_commit=None):
+    """The module's one exactly-once micro-batch protocol (steps in
+    the module docstring): ``body(root, batch, batch_id)`` writes the
+    batch's ``batch=N`` dirs and returns the marker payload;
+    ``after_commit(root, batch_id)`` runs only once the marker is
+    durable. Returns the started StreamingQuery."""
+    root = Path(store_dir)
+    _bind_lineage(root, checkpoint_dir)
+
+    def write_batch(batch: DataFrame, batch_id: int) -> None:
+        if batch_id in set(_committed_batches(root)):
+            return  # replayed, fully committed batch: exactly-once
+        _commit(root, batch_id, body(root, batch, batch_id))
+        if after_commit is not None:
+            after_commit(root, batch_id)
+
+    return (
+        stream.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", str(checkpoint_dir))
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _exact_dedup_body(
     root: Path, rows_in: DataFrame, batch_id: int, tier: str
-) -> None:
-    """The shared exact-dedup commit tail (r5 review: previously
-    duplicated between the dedup and curation streams): anti-join the
-    committed fingerprint store, append the surviving rows and their
-    fingerprint delta under batch-keyed overwrite dirs, then commit
-    the marker — one copy of the exactly-once protocol."""
+) -> dict:
+    """The exact-dedup body shared by the dedup and curation streams:
+    anti-join the committed fingerprint store, append the surviving
+    rows and their fingerprint delta under batch-keyed overwrite
+    dirs, and return the marker payload."""
     spark = rows_in.sparkSession
-    seen = _committed_store(spark, root, "fingerprints")
+    seen = read_store_snapshot(spark, root, "fingerprints")
     if seen is None:
         seen = spark.createDataFrame([], "fingerprint string")
     surv = dd.incremental_exact_survivors(
@@ -144,7 +186,7 @@ def _exact_dedup_commit(
         "overwrite"
     ).parquet(str(_batch_dir(root, "fingerprints", batch_id)))
     rows.unpersist()
-    _commit(root, batch_id, {"tier": tier})
+    return {"tier": tier}
 
 
 def read_store_snapshot(
@@ -164,10 +206,15 @@ def read_store_snapshot(
 
     DELTA stores only (corpus/fingerprints/signatures/matches/vectors
     — each batch dir holds that batch's additions, so the union IS
-    the state). The cluster stream's ``assignments`` store is a
-    FULL-snapshot-per-batch store: unioning its dirs double-counts;
-    read its single newest committed dir instead (and note its older
-    snapshots are garbage-collected past retain_snapshots)."""
+    the state). FULL-snapshot-per-batch stores (cluster assignments,
+    heavy-hitter summary/totals, percentile hist, OHLC state) would
+    double-count if unioned: ``_latest_snapshot`` reads them.
+
+    Each ``batch=N`` directory is read as its own base path, so NO
+    partition column is inferred — the frame carries exactly the
+    store's data columns. Reading an explicit path list (not the
+    parent dir) is what keeps half-written replay attempts invisible
+    to the NEXT batch."""
     root = Path(store_dir)
     batches = [
         b for b in _committed_batches(root) if as_of is None or b <= as_of
@@ -180,6 +227,20 @@ def read_store_snapshot(
     if not paths:
         return None
     return spark.read.parquet(*paths)
+
+
+def _latest_snapshot(
+    spark: SparkSession, root: Path, name: str
+) -> DataFrame | None:
+    """The newest marker-committed ``<name>/batch=N`` dir of a
+    FULL-snapshot-per-batch store, or None when there is none. A
+    committed batch without that family's dir (retention dropped it,
+    or it was deleted by hand) falls back to the next older one."""
+    for b in reversed(_committed_batches(root)):
+        d = _batch_dir(root, name, b)
+        if d.exists():
+            return spark.read.parquet(str(d))
+    return None
 
 
 def diff_store_snapshots(
@@ -223,18 +284,6 @@ def diff_store_snapshots(
     return added.unionByName(removed)
 
 
-def _committed_store(
-    spark: SparkSession, root: Path, name: str
-) -> DataFrame | None:
-    """Latest committed view of one store — read_store_snapshot with
-    no as_of bound. Each ``batch=N`` directory is read as its own
-    base path, so NO partition column is inferred — the frame
-    carries exactly the store's data columns. Reading an explicit
-    path list (not the parent dir) is what keeps half-written replay
-    attempts invisible to the NEXT batch."""
-    return read_store_snapshot(spark, root, name)
-
-
 def dedup_document_stream(
     docs: DataFrame,
     store_dir: str | Path,
@@ -249,22 +298,13 @@ def dedup_document_stream(
     Returns the StreamingQuery (availableNow trigger: the caller
     drains what exists and awaits termination; swap the trigger for
     continuous deployments)."""
-    root = Path(store_dir)
-    _bind_lineage(root, checkpoint_dir)
 
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch_id in set(_committed_batches(root)):
-            return  # replayed, fully committed batch: exactly-once
+    def body(root: Path, batch: DataFrame, batch_id: int) -> dict:
         # survivor rows carry the batch's full payload (the join back
-        # to the batch happens inside the shared commit tail)
-        _exact_dedup_commit(root, batch, batch_id, "exact")
+        # to the batch happens inside the shared body)
+        return _exact_dedup_body(root, batch, batch_id, "exact")
 
-    return (
-        docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _exactly_once(docs, store_dir, checkpoint_dir, body)
 
 
 def near_dup_document_stream(
@@ -285,14 +325,10 @@ def near_dup_document_stream(
     Matches are advisory output (downstream decides drop/keep); every
     batch's signatures join the store regardless, so later batches
     also match against near-dup survivors, mirroring the batch tier."""
-    root = Path(store_dir)
-    _bind_lineage(root, checkpoint_dir)
 
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch_id in set(_committed_batches(root)):
-            return
+    def body(root: Path, batch: DataFrame, batch_id: int) -> dict:
         spark = batch.sparkSession
-        seen = _committed_store(spark, root, "signatures")
+        seen = read_store_snapshot(spark, root, "signatures")
         sig = dd.build_signature_store(batch, "doc_id", "text").persist()
         sig.count()  # eager: match join + store write share it
         if seen is not None:
@@ -315,14 +351,9 @@ def near_dup_document_stream(
             str(_batch_dir(root, "signatures", batch_id))
         )
         sig.unpersist()
-        _commit(root, batch_id, {"tier": "near"})
+        return {"tier": "near"}
 
-    return (
-        docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _exactly_once(docs, store_dir, checkpoint_dir, body)
 
 
 def curate_document_stream(
@@ -354,12 +385,7 @@ def curate_document_stream(
     from lynx_spark.functions.text import with_pii_redacted
     from lynx_spark.operators.quality import gopher_rules
 
-    root = Path(store_dir)
-    _bind_lineage(root, checkpoint_dir)
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch_id in set(_committed_batches(root)):
-            return
+    def body(root: Path, batch: DataFrame, batch_id: int) -> dict:
         kept = batch.join(
             gopher_rules(batch, "doc_id", "text")
             .filter(F.col("keep"))
@@ -371,14 +397,9 @@ def curate_document_stream(
             "source",
             F.col("redacted").alias("text"),
         )
-        _exact_dedup_commit(root, scrubbed, batch_id, "curate")
+        return _exact_dedup_body(root, scrubbed, batch_id, "curate")
 
-    return (
-        docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _exactly_once(docs, store_dir, checkpoint_dir, body)
 
 
 def cluster_document_stream(
@@ -410,15 +431,9 @@ def cluster_document_stream(
     not O(batches × corpus)."""
     from lynx_spark.operators import graph as gr
 
-    root = Path(store_dir)
-    _bind_lineage(root, checkpoint_dir)
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        committed = _committed_batches(root)
-        if batch_id in set(committed):
-            return
+    def body(root: Path, batch: DataFrame, batch_id: int) -> dict:
         spark = batch.sparkSession
-        seen_sig = _committed_store(spark, root, "signatures")
+        seen_sig = read_store_snapshot(spark, root, "signatures")
         sig = dd.build_signature_store(batch, "doc_id", "text").persist()
         sig.count()
         # in-batch pairs from the ALREADY-built signatures (r5 review:
@@ -435,11 +450,12 @@ def cluster_document_stream(
             pairs = in_batch.unionByName(cross)
         else:
             pairs = in_batch
-        prior_batches = [b for b in committed if b < batch_id]
-        if prior_batches:
-            prior = spark.read.parquet(
-                str(_batch_dir(root, "assignments", max(prior_batches)))
-            ).select("doc_id", "cluster_id")
+        # the running batch has no marker yet, and markers are always a
+        # prefix of the batch ids: the newest committed snapshot is the
+        # prior batch's
+        prior = _latest_snapshot(spark, root, "assignments")
+        if prior is not None:
+            prior = prior.select("doc_id", "cluster_id")
         else:
             prior = spark.createDataFrame(
                 [], "doc_id long, cluster_id long"
@@ -454,24 +470,19 @@ def cluster_document_stream(
             str(_batch_dir(root, "signatures", batch_id))
         )
         sig.unpersist()
-        _commit(root, batch_id, {"tier": "cluster"})
+        return {"tier": "cluster"}
+
+    def retain(root: Path, batch_id: int) -> None:
         # bounded retention: committed snapshots older than the newest
         # retain_snapshots are unreachable (replays read only the
         # immediately prior committed snapshot) — drop their files
-        import shutil
+        for b in _committed_batches(root)[:-retain_snapshots]:
+            shutil.rmtree(
+                _batch_dir(root, "assignments", b), ignore_errors=True
+            )
 
-        survivors = sorted(_committed_batches(root))[-retain_snapshots:]
-        for b in _committed_batches(root):
-            if b not in survivors:
-                shutil.rmtree(
-                    _batch_dir(root, "assignments", b), ignore_errors=True
-                )
-
-    return (
-        docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
+    return _exactly_once(
+        docs, store_dir, checkpoint_dir, body, after_commit=retain
     )
 
 
@@ -513,14 +524,10 @@ def embedding_stream_assign(
     batch directories)."""
     from lynx_spark.operators import similarity as sim
 
-    root = Path(store_dir)
-    _bind_lineage(root, checkpoint_dir)
     # the index is immutable — load the k×dim model ONCE, not per batch
     centroids = sim.load_ivf_index(vecs.sparkSession, str(index_path))
 
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch_id in set(_committed_batches(root)):
-            return
+    def body(root: Path, batch: DataFrame, batch_id: int) -> dict:
         spark = batch.sparkSession
         assigned = (
             batch.select(
@@ -532,7 +539,7 @@ def embedding_stream_assign(
             .persist()
         )
         assigned.count()  # eager: match join + store write share it
-        seen = _committed_store(spark, root, "vectors")
+        seen = read_store_snapshot(spark, root, "vectors")
         if seen is not None:
             matches = (
                 assigned.alias("n")
@@ -566,14 +573,9 @@ def embedding_stream_assign(
             str(_batch_dir(root, "vectors", batch_id))
         )
         assigned.unpersist()
-        _commit(root, batch_id, {"tier": "embedding"})
+        return {"tier": "embedding"}
 
-    return (
-        vecs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _exactly_once(vecs, store_dir, checkpoint_dir, body)
 
 
 def _committed_bloom(root: Path, m_bits: int) -> tuple[bytes | None, bool]:
@@ -633,13 +635,11 @@ def bloom_dedup_document_stream(
         build_fingerprint_bloom,
     )
 
-    root = Path(store_dir)
-    _bind_lineage(root, checkpoint_dir)
-    assert m_bits % 8 == 0
+    # before the lineage binds: a rejected call leaves the store untouched
+    if m_bits <= 0 or m_bits % 8:
+        raise ValueError(f"m_bits must be a positive multiple of 8, got {m_bits}")
 
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch_id in set(_committed_batches(root)):
-            return
+    def body(root: Path, batch: DataFrame, batch_id: int) -> dict:
         spark = batch.sparkSession
         fp = batch.select(
             F.md5(F.col("text")).alias("fingerprint"),
@@ -654,7 +654,7 @@ def bloom_dedup_document_stream(
             # the merged bloom would report its fingerprints as fresh
             # (false negatives) — degrade to the plain tier's full
             # anti-join, correctness over the prefilter speedup
-            seen = _committed_store(spark, root, "fingerprints")
+            seen = read_store_snapshot(spark, root, "fingerprints")
             surv = in_batch.join(
                 seen.select("fingerprint"), "fingerprint", "left_anti"
             )
@@ -683,7 +683,7 @@ def bloom_dedup_document_stream(
             ).persist()
             flagged.count()
             fresh = flagged.filter(~F.col("_maybe")).drop("_maybe")
-            seen = _committed_store(spark, root, "fingerprints")
+            seen = read_store_snapshot(spark, root, "fingerprints")
             confirmed = (
                 flagged.filter(F.col("_maybe"))
                 .drop("_maybe")
@@ -706,14 +706,9 @@ def bloom_dedup_document_stream(
         bdir.mkdir(parents=True, exist_ok=True)
         (bdir / "filter.bin").write_bytes(delta_bits)
         rows.unpersist()
-        _commit(root, batch_id, {"tier": "exact-bloom"})
+        return {"tier": "exact-bloom"}
 
-    return (
-        docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _exactly_once(docs, store_dir, checkpoint_dir, body)
 
 
 def drift_monitor_stream(
@@ -739,25 +734,16 @@ def drift_monitor_stream(
     latest batch."""
     from lynx_spark.operators.quality import category_drift_psi
 
-    root = Path(store_dir)
-    _bind_lineage(root, checkpoint_dir)
     ref_cats = reference.select(F.col(cat_col))
 
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch_id in set(_committed_batches(root)):
-            return
+    def body(root: Path, batch: DataFrame, batch_id: int) -> dict:
         report = category_drift_psi(batch, ref_cats, cat_col)
         report.write.mode("overwrite").parquet(
             str(_batch_dir(root, "drift", batch_id))
         )
-        _commit(root, batch_id, {"tier": "drift"})
+        return {"tier": "drift"}
 
-    return (
-        docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _exactly_once(docs, store_dir, checkpoint_dir, body)
 
 
 def numeric_drift_monitor_stream(
@@ -776,25 +762,16 @@ def numeric_drift_monitor_stream(
     deployment gates ingestion on max(ks_term) of the latest batch."""
     from lynx_spark.operators.quality import numeric_drift_ks
 
-    root = Path(store_dir)
-    _bind_lineage(root, checkpoint_dir)
     ref_vals = reference.select(F.col(val_col))
 
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch_id in set(_committed_batches(root)):
-            return
+    def body(root: Path, batch: DataFrame, batch_id: int) -> dict:
         report = numeric_drift_ks(batch, ref_vals, val_col, nbins=nbins)
         report.write.mode("overwrite").parquet(
             str(_batch_dir(root, "ksdrift", batch_id))
         )
-        _commit(root, batch_id, {"tier": "ksdrift"})
+        return {"tier": "ksdrift"}
 
-    return (
-        docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _exactly_once(docs, store_dir, checkpoint_dir, body)
 
 
 def distinct_count_stream(
@@ -821,17 +798,12 @@ def distinct_count_stream(
         hll_registers,
     )
 
-    root = Path(store_dir)
-    _bind_lineage(root, checkpoint_dir)
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch_id in set(_committed_batches(root)):
-            return
+    def body(root: Path, batch: DataFrame, batch_id: int) -> dict:
         spark = batch.sparkSession
         regs = hll_registers(
             batch.select(F.col(value_col).cast("string").alias("s")), "s"
         )
-        prior = _committed_store(spark, root, "registers")
+        prior = read_store_snapshot(spark, root, "registers")
         merged = hll_merge(prior, regs) if prior is not None else regs
         merged = merged.persist()
         merged.count()  # eager: estimate + store write share it
@@ -842,14 +814,9 @@ def distinct_count_stream(
             str(_batch_dir(root, "counts", batch_id))
         )
         merged.unpersist()
-        _commit(root, batch_id, {"tier": "hll"})
+        return {"tier": "hll"}
 
-    return (
-        docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _exactly_once(docs, store_dir, checkpoint_dir, body)
 
 
 def heavy_hitters_stream(
@@ -879,8 +846,6 @@ def heavy_hitters_stream(
     there is no second exact-count pass (the stream is gone);
     consumers filter ``est_count`` against their own support
     threshold knowing a true heavy hitter can never be absent."""
-    root = Path(store_dir)
-    _bind_lineage(root, checkpoint_dir)
 
     def _compress(counts: DataFrame) -> DataFrame:
         top = (
@@ -895,20 +860,7 @@ def heavy_hitters_stream(
             "v", (F.col("est_count") - F.lit(m)).alias("est_count")
         )
 
-    def _latest(spark: SparkSession, name: str) -> DataFrame | None:
-        # summary/totals are FULL-snapshot-per-batch stores (like the
-        # cluster stream's assignments): unioning batch dirs would
-        # double-count the summed counters — read only the newest
-        # committed dir
-        for b in sorted(_committed_batches(root), reverse=True):
-            d = _batch_dir(root, name, b)
-            if d.exists():
-                return spark.read.parquet(str(d))
-        return None
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch_id in set(_committed_batches(root)):
-            return
+    def body(root: Path, batch: DataFrame, batch_id: int) -> dict:
         spark = batch.sparkSession
         vals = batch.select(
             F.col(value_col).cast("string").alias("v")
@@ -918,14 +870,16 @@ def heavy_hitters_stream(
         )
         n_batch = vals.count()
         summary = _compress(bc)
-        prior = _latest(spark, "summary")
+        # summary/totals are FULL-snapshot-per-batch stores: unioning
+        # batch dirs would double-count the summed counters
+        prior = _latest_snapshot(spark, root, "summary")
         if prior is not None:
             summary = _compress(
                 summary.unionByName(prior)
                 .groupBy("v")
                 .agg(F.sum("est_count").cast("long").alias("est_count"))
             )
-        prior_tot = _latest(spark, "totals")
+        prior_tot = _latest_snapshot(spark, root, "totals")
         n_total = n_batch + (
             prior_tot.collect()[0]["n_total"] if prior_tot is not None else 0
         )
@@ -940,14 +894,9 @@ def heavy_hitters_stream(
             str(_batch_dir(root, "totals", batch_id))
         )
         summary.unpersist()
-        _commit(root, batch_id, {"tier": "misra_gries", "k": k})
+        return {"tier": "misra_gries", "k": k}
 
-    return (
-        docs.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _exactly_once(docs, store_dir, checkpoint_dir, body)
 
 
 def percentile_stream(
@@ -975,9 +924,6 @@ def percentile_stream(
     n_total — nearest-rank: smallest grid value whose cumulative
     count reaches ceil(p/100 * n)), with the marker-commit
     exactly-once contract shared by every store in this module."""
-    root = Path(store_dir)
-    _bind_lineage(root, checkpoint_dir)
-
     # carried-state cache (r15): the merged histogram of the LAST
     # COMMITTED batch stays persisted across micro-batches, so batch
     # N+1 merges against the in-memory frame instead of re-reading the
@@ -987,26 +933,11 @@ def percentile_stream(
     # marker lands (a crash between hist-write and commit leaves the
     # cache un-promoted, and the replay re-merges from the last
     # COMMITTED state), and a fresh stream (restart) starts with an
-    # empty cache and falls back to the parquet read.
-    _carried: dict = {"batch": None, "hist": None}
+    # empty cache and falls back to the parquet read. "merged" holds
+    # the body's histogram until the post-commit promotion takes it.
+    _carried: dict = {"batch": None, "hist": None, "merged": None}
 
-    def _latest_hist(spark: SparkSession) -> DataFrame | None:
-        committed = sorted(_committed_batches(root), reverse=True)
-        if (
-            committed
-            and _carried["batch"] == committed[0]
-            and _carried["hist"] is not None
-        ):
-            return _carried["hist"]
-        for b in committed:
-            d = _batch_dir(root, "hist", b)
-            if d.exists():
-                return spark.read.parquet(str(d))
-        return None
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch_id in set(_committed_batches(root)):
-            return
+    def body(root: Path, batch: DataFrame, batch_id: int) -> dict:
         spark = batch.sparkSession
         bh = (
             batch.select(
@@ -1021,7 +952,11 @@ def percentile_stream(
             .groupBy("gv")
             .agg(F.count("*").cast("long").alias("cnt"))
         )
-        prior = _latest_hist(spark)
+        committed = _committed_batches(root)
+        if committed and _carried["batch"] == committed[-1]:
+            prior = _carried["hist"]
+        else:
+            prior = _latest_snapshot(spark, root, "hist")
         if prior is not None:
             bh = (
                 bh.unionByName(prior)
@@ -1032,7 +967,7 @@ def percentile_stream(
         # itself an action that populates the cache, and the percentile
         # pass then reads it — the separate count job per micro-batch
         # was pure scheduling overhead
-        bh = bh.persist()
+        bh = _carried["merged"] = bh.persist()
         bh.write.mode("overwrite").parquet(
             str(_batch_dir(root, "hist", batch_id))
         )
@@ -1087,11 +1022,9 @@ def percentile_stream(
         out.write.mode("overwrite").parquet(
             str(_batch_dir(root, "pct", batch_id))
         )
-        _commit(
-            root,
-            batch_id,
-            {"tier": "grid_histogram", "grid": grid},
-        )
+        return {"tier": "grid_histogram", "grid": grid}
+
+    def promote(root: Path, batch_id: int) -> None:
         # promote the merged histogram to the carried cache only now
         # that the commit marker is durable; the previous state frame
         # (if any) is superseded and unpersists. Every _HIST_TRUNCATE
@@ -1101,10 +1034,10 @@ def percentile_stream(
         # recompute-on-eviction hazard on long streams — the graph
         # loop's _TRUNCATE_EVERY discipline), and the lazy file read
         # costs nothing now while resetting the plan to a leaf.
-        prev = _carried["hist"]
+        prev, bh = _carried["hist"], _carried["merged"]
         if (batch_id + 1) % _HIST_TRUNCATE == 0:
             _carried["batch"] = batch_id
-            _carried["hist"] = spark.read.parquet(
+            _carried["hist"] = bh.sparkSession.read.parquet(
                 str(_batch_dir(root, "hist", batch_id))
             ).persist()
             bh.unpersist()
@@ -1113,11 +1046,8 @@ def percentile_stream(
         if prev is not None:
             prev.unpersist()
 
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
+    return _exactly_once(
+        events, store_dir, checkpoint_dir, body, after_commit=promote
     )
 
 
@@ -1142,20 +1072,10 @@ def ohlc_stream(
     contract shared by every store in this module. The reported bars
     equal the batch q230 computation over the concatenated stream
     for ANY batch split (tested)."""
-    root = Path(store_dir)
-    _bind_lineage(root, checkpoint_dir)
-
     ENDPOINT = [
         "o_ts", "o_eid", "o_gv", "c_ts", "c_eid", "c_gv",
         "hi", "lo", "cnt",
     ]
-
-    def _latest_bars(spark: SparkSession) -> DataFrame | None:
-        for b in sorted(_committed_batches(root), reverse=True):
-            d = _batch_dir(root, "state", b)
-            if d.exists():
-                return spark.read.parquet(str(d))
-        return None
 
     def _summarize(df: DataFrame) -> DataFrame:
         # min_by/max_by on the (ts, event_id) witness struct: one
@@ -1176,10 +1096,7 @@ def ohlc_stream(
             F.sum("cnt").cast("long").alias("cnt"),
         )
 
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        if batch_id in set(_committed_batches(root)):
-            return
-        spark = batch.sparkSession
+    def body(root: Path, batch: DataFrame, batch_id: int) -> dict:
         gv = F.floor(F.col("value").cast("double") * F.lit(100.0) + F.lit(0.5)).cast(
             "long"
         )
@@ -1197,7 +1114,7 @@ def ohlc_stream(
             F.lit(1).cast("long").alias("cnt"),
         )
         state = _summarize(rows)
-        prior = _latest_bars(spark)
+        prior = _latest_snapshot(batch.sparkSession, root, "state")
         if prior is not None:
             state = _summarize(
                 state.unionByName(prior.select("day", "event_type", *ENDPOINT))
@@ -1221,11 +1138,6 @@ def ohlc_stream(
             )
         )
         state.unpersist()
-        _commit(root, batch_id, {"tier": "ohlc_bars"})
+        return {"tier": "ohlc_bars"}
 
-    return (
-        events.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", str(checkpoint_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _exactly_once(events, store_dir, checkpoint_dir, body)

@@ -96,7 +96,7 @@ ALLOWLIST: dict[tuple[str, str], tuple[int, str]] = {
     # dimension-sized (it exists to salt a skewed dim join)
     ("operators/skew.py", "salted_broadcast_join"): (1, "DIM"),
     # streaming: the merged per-batch state frame (state-store grain)
-    ("streaming/incremental.py", "write_batch"): (1, "DOMAIN"),
+    ("streaming/incremental.py", "body"): (1, "DOMAIN"),
     # analytics registry sites (audited by the r10 judge, then here):
     ("plans/analytics.py", "q05"): (3, "DIM"),
     ("plans/analytics.py", "q107"): (3, "DOMAIN"),

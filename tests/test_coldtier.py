@@ -458,20 +458,51 @@ def test_stream_sink_rejects_empty_sink_id(spark, tmp_path):
 def test_gc_sweeps_pre_rename_orphan_patterns(tiered, tmp_path):
     """r2 review pass 2: uncommitted leftovers in the OLD flush naming
     (part-mNNNNNN) are swept, while sink-style part-m... names are
-    untouched."""
+    untouched. The flush GC's other name rules ride along: flush and
+    exact-width optimize leftovers go (in every table dir), committed
+    files (visible or tombstoned) and non-engine names stay."""
     day = tmp_path / "cold/ns/cpu/day=1970-01-01"
-    day.mkdir(parents=True, exist_ok=True)
+    # two flushes + an optimize: one visible part-opt file, two
+    # tombstoned part-flush files — all protected from the GC
+    for v in ("a", "b"):
+        _write(tiered, v, 1)
+        tiered.flush("ns")
+    assert tiered.optimize("ns") == 2
+    committed = sorted(p.name for p in day.iterdir())
+    assert len(committed) == 3
     old_orphan = day / "part-m000007-00000.parquet"
     old_orphan.write_bytes(b"x")
     old_tmp = day / ".tmp-m000007"
     old_tmp.write_bytes(b"x")
     sinkish = day / "part-metrics-000000001-00000.parquet"
     sinkish.write_bytes(b"x")
+    other_day = tmp_path / "cold/ns/mem/day=1970-01-02"
+    other_day.mkdir(parents=True)
+    swept = [
+        day / "part-flush000099-00000.parquet",
+        other_day / "part-flush000098-00000.parquet",
+        day / ".tmp-flush000099",
+        day / "part-opt000099-00000.parquet",
+        day / ".tmp-opt000099",
+        other_day / ".tmp-opt000099-00001",
+    ]
+    kept = [
+        day / "part-opt99-0.parquet",  # not the exact optimize width
+        day / ".tmp-opt0000991",
+        day / ".tmp-m0000071",
+        day / "part-m1-000000001-00000.parquet",  # sink "m1"
+        other_day / "part-flush000098-00000.crc",  # not parquet
+    ]
+    for p in swept + kept:
+        p.write_bytes(b"x")
     _write(tiered, "1", 1)
     tiered.flush("ns")
     assert not old_orphan.exists()
     assert not old_tmp.exists()
     assert sinkish.exists()
+    assert [p.name for p in swept if p.exists()] == []
+    assert [p.name for p in kept if not p.exists()] == []
+    assert all((day / name).exists() for name in committed)
 
 
 def test_flushed_and_streamed_files_coexist_in_one_table(spark, tmp_path):

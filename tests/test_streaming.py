@@ -1303,3 +1303,134 @@ def test_streaming_ohlc_equals_batch_bars(spark, tmp_path):
     assert click[2] == 5.00 and click[5] == 3.00
     # replay adds nothing
     assert len(list((store / "_commits").glob("b*.json"))) == 2
+
+
+@pytest.mark.parametrize("m_bits", [12, 0])
+def test_bloom_tier_rejects_bad_m_bits_before_writing(spark, tmp_path, m_bits):
+    """A filter size that is not a positive multiple of 8 is refused
+    with an error (not an assert, which ``python -O`` strips) before
+    the store is bound to the checkpoint: nothing is written."""
+    from lynx_spark.streaming import (
+        bloom_dedup_document_stream,
+        read_document_stream,
+    )
+
+    d = tmp_path / "in"
+    _write_docs(d / "b1.json", [(1, "alpha text")])
+    store = tmp_path / "store"
+    with pytest.raises(ValueError, match="m_bits"):
+        bloom_dedup_document_stream(
+            read_document_stream(spark, d), store, tmp_path / "ck",
+            m_bits=m_bits,
+        )
+    assert not store.exists() or not any(store.iterdir())
+
+
+def _store_contents(spark, store):
+    """Every batch dir of every store family: its rows when it holds
+    parquet, else its files' bytes (the Bloom tier's filter.bin)."""
+    out = {}
+    for fam in sorted(p for p in store.iterdir() if p.is_dir()):
+        if fam.name == "_commits":
+            continue
+        for b in sorted(fam.glob("batch=*")):
+            if any(b.glob("*.parquet")):
+                rows = spark.read.parquet(str(b)).collect()
+                out[fam.name, b.name] = sorted(map(repr, rows))
+            else:
+                out[fam.name, b.name] = sorted(
+                    (f.name, f.read_bytes()) for f in b.iterdir()
+                )
+    return out
+
+
+_REPLAY_OPERATORS = [
+    "curate", "cluster", "bloom", "drift", "numeric_drift",
+    "distinct_count", "heavy_hitters", "percentile", "ohlc",
+]
+
+
+@pytest.mark.parametrize("op", _REPLAY_OPERATORS)
+def test_streaming_operator_replay_is_exactly_once(spark, tmp_path, op):
+    """Full replay (checkpoint removed and recreated at the same path)
+    of each document-stream operator not covered by its own replay
+    test: both runs commit the same two markers, and every store
+    family's rows are identical after the replay."""
+    import shutil
+
+    from lynx_spark.streaming import incremental as inc
+
+    good = " ".join(["the", "and"] + [f"word{i}" for i in range(22)])
+    docs_dir = tmp_path / "docs"
+    _write_docs_src(
+        docs_dir / "b1.json",
+        [(1, good, "web"), (2, good + " extra", "books"), (3, "the and of", "web")],
+    )
+    _write_docs_src(
+        docs_dir / "b2.json",
+        [(11, good, "web"), (12, "novel words entirely fresh here today", "books")],
+    )
+    ev_dir = tmp_path / "events"
+    for name, rows in (
+        ("b1.json", [(1, "2024-01-05 09:00:00", "click", 7.0),
+                     (2, "2024-01-05 12:00:00", "view", 1.5)]),
+        ("b2.json", [(3, "2024-01-05 09:00:00", "click", 5.0),
+                     (4, "2024-01-06 01:00:00", "view", 9.25)]),
+    ):
+        _write_jsonl(
+            ev_dir / name,
+            [
+                {"event_id": e, "ts": ts, "event_type": t, "value": v}
+                for e, ts, t, v in rows
+            ],
+        )
+    ref_docs = spark.createDataFrame(
+        [(i, "t", "web" if i % 2 else "books") for i in range(8)],
+        ["doc_id", "text", "source"],
+    )
+    ref_vals = spark.createDataFrame([(float(i),) for i in range(8)], ["value"])
+    start = {
+        "curate": lambda s, st, ck: inc.curate_document_stream(s, st, ck),
+        "cluster": lambda s, st, ck: inc.cluster_document_stream(s, st, ck),
+        "bloom": lambda s, st, ck: inc.bloom_dedup_document_stream(
+            s, st, ck, m_bits=1 << 13
+        ),
+        "drift": lambda s, st, ck: inc.drift_monitor_stream(
+            s, ref_docs, "source", st, ck
+        ),
+        "numeric_drift": lambda s, st, ck: inc.numeric_drift_monitor_stream(
+            s, ref_vals, "value", st, ck, nbins=4
+        ),
+        "distinct_count": lambda s, st, ck: inc.distinct_count_stream(
+            s, "event_type", st, ck
+        ),
+        "heavy_hitters": lambda s, st, ck: inc.heavy_hitters_stream(
+            s, "event_type", st, ck, k=1
+        ),
+        "percentile": lambda s, st, ck: inc.percentile_stream(
+            s, "value", st, ck
+        ),
+        "ohlc": lambda s, st, ck: inc.ohlc_stream(s, st, ck),
+    }[op]
+    if op in ("curate", "cluster", "bloom", "drift"):
+        schema, src = inc.DOC_SCHEMA, docs_dir
+    else:
+        schema = "event_id long, ts timestamp, event_type string, value double"
+        src = ev_dir
+
+    store, ck = tmp_path / "store", tmp_path / "ck"
+    seen = []
+    for _ in range(2):
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src))
+        )
+        start(stream, store, ck).awaitTermination(180)
+        shutil.rmtree(ck)  # same-path fresh checkpoint = full replay
+        markers = sorted(p.name for p in (store / "_commits").glob("b*.json"))
+        seen.append((markers, _store_contents(spark, store)))
+    (markers, contents), replayed = seen
+    assert len(markers) == 2
+    assert contents
+    assert replayed == (markers, contents)
