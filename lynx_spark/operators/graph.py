@@ -27,12 +27,10 @@ building blocks.
 Convergence detection without a compare-join: labels only ever
 DECREASE, so the fixpoint is reached exactly when sum(labels) stops
 changing — one scalar aggregate per round (summed as DECIMAL(38,0) so
-a 10^12-vertex corpus cannot overflow the check). Per-round results
-are persisted and the previous round unpersisted; on a real cluster
-the driver loop is the standard iterative-algorithm shape (GraphX/
-GraphFrames do the same), with periodic checkpointing to truncate
-lineage — here rounds are few and each round's cache bounds
-recomputation.
+a 10^12-vertex corpus cannot overflow the check). Each round's labels
+are eagerly localCheckpoint-ed and the previous round's checkpoint
+released — the standard iterative driver loop (GraphX/GraphFrames do
+the same); the frame-lifetime helpers live in ``_util``.
 """
 
 from __future__ import annotations
@@ -40,7 +38,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
-from lynx_spark.operators._util import broadcast_if_counted
+from lynx_spark.operators._util import (
+    _collect_then_release,
+    _finalize_iterative,
+    _release_frame,
+    _truncate_round,
+    _truncates,
+    broadcast_if_counted,
+    double_sql,
+)
 
 #: propagation-round guard; diameter of dedup pair graphs is tiny, so
 #: hitting this indicates a pathological chain — the loop then hands
@@ -77,78 +83,17 @@ def _round8(col: Column) -> Column:
     return F.floor(col * F.lit(1e8) + F.lit(0.5)) / F.lit(1e8)
 
 
-def _release_frame(df: DataFrame) -> None:
-    """Free the storage behind a superseded iteration frame — BOTH
-    tiers: the CacheManager entry (covers plain .persist() frames;
-    no-op otherwise) and, for an eager localCheckpoint, the block
-    storage of the underlying LogicalRDD. The latter matters because
-    checkpoint blocks are NOT reclaimed by the ContextCleaner (an
-    unpersisted local checkpoint is unrecoverable — its lineage was
-    truncated — so Spark never frees one automatically; measured: 25
-    orphaned block sets after a 20-iteration HITS run). Call ONLY on
-    frames that are provably dead: every consumer already materialized
-    into a later checkpoint. A wrongly-released frame fails fast with
-    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND rather than corrupting results.
-    Best-effort on the reflection path: an internals change leaks the
-    blocks instead of crashing the query."""
-    df.unpersist()
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if "LogicalRDD" in plan.getClass().getSimpleName():
-            plan.rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — reflection is version-coupled
-        pass
+def _dsum_sql(x: str) -> str:
+    """SQL text of ``_unq12(sum(_q12(x)))``, double literals only."""
+    return (
+        f"CAST(sum(CAST(floor({x} * 1e12D + 0.5D) AS DECIMAL(38,0))) "
+        "AS DOUBLE) / 1e12D"
+    )
 
 
-# Iterative operators truncate lineage every N rounds (r10): a plan
-# that only GROWS linearly per round still re-analyzes its whole
-# history each iteration and overflows Catalyst's recursion at high
-# round counts — at 100 TB a 20+-round run is a stack hazard, not a
-# style issue. 5 keeps the default 2-3-round calls checkpoint-free
-# (zero extra jobs) while bounding any run's live lineage to <5
-# rounds. Module-level so tests can force either regime.
-_TRUNCATE_EVERY = 5
-
-
-def _truncate_round(
-    df: DataFrame, round_no: int, prev_ckpt: DataFrame | None
-) -> tuple[DataFrame, DataFrame | None]:
-    """Every ``_TRUNCATE_EVERY``-th round: eagerly checkpoint the
-    round frame (materialize + cut lineage to a leaf) and release the
-    previous checkpoint, whose consumers just materialized into the
-    new one. Other rounds pass through untouched."""
-    if round_no % _TRUNCATE_EVERY != 0:
-        return df, prev_ckpt
-    ckpt = df.localCheckpoint(eager=True)
-    if prev_ckpt is not None:
-        _release_frame(prev_ckpt)
-    return ckpt, ckpt
-
-
-def _finalize_iterative(
-    result: DataFrame, ckpt: DataFrame | None, *held: DataFrame
-) -> DataFrame:
-    """Close out a truncated iterative run without leaking the round
-    checkpoint: when the loop ended on/after a truncation, the lazy
-    result still reads the final checkpoint's blocks, which are never
-    reclaimed automatically — and releasing them early would leave
-    the result recomputing through freed blocks (the eviction failure
-    mode: CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND). So the RESULT itself is
-    eagerly checkpointed — materialized into its own leaf blocks,
-    lineage cut, MEMORY_AND_DISK so eviction spills instead of
-    failing — then the superseded round checkpoint (plus any
-    operator-held caches in ``held``) is released. The caller can
-    free the returned frame with ``_release_frame`` when done — the
-    hook the un-finalized form lacked. Runs shorter than
-    ``_TRUNCATE_EVERY`` rounds never checkpoint and pass through
-    lazily: zero extra jobs on the default paths."""
-    if ckpt is None:
-        return result
-    final = result.localCheckpoint(eager=True)
-    _release_frame(ckpt)
-    for f in held:
-        _release_frame(f)
-    return final
+def _round8_sql(x: str) -> str:
+    """SQL text of ``_round8(x)``."""
+    return f"floor({x} * 1e8D + 0.5D) / 1e8D"
 
 
 def _canonical_edges(e: DataFrame) -> DataFrame:
@@ -735,48 +680,58 @@ def hits_scores(
     half-step; every cross-row sum (the in/out aggregations AND the
     normalizers) quantizes terms to exact 1e-12 integers (_q12, the
     tie-safe floor device) and sums exactly — order-free and
-    bit-matched by the unrolled SQL oracle."""
-    base = nodes.select(F.col(node_col).cast("long").alias("_v"))
+    bit-matched by the unrolled SQL oracle. Round expressions cross to
+    the JVM as SQL text."""
+    base = nodes.selectExpr(f"CAST(`{node_col}` AS BIGINT) AS _v")
     # the edge list feeds 2 joins per iteration: persist, or the
     # whole upstream edge construction (a kNN build, typically)
     # re-runs per occurrence (measured 70s -> 9s at sf0.01). No eager
     # count (r15): the first half-step's checkpoint job fills the
     # cache — a separate materialization pass was pure extra work.
-    e = edges.select(
-        F.col(edges.columns[0]).cast("long").alias("_src"),
-        F.col(edges.columns[1]).cast("long").alias("_dst"),
+    src, dst = edges.columns[:2]
+    e = edges.selectExpr(
+        f"CAST(`{src}` AS BIGINT) AS _src", f"CAST(`{dst}` AS BIGINT) AS _dst"
     ).persist()
-
-    def dsum(col: Column) -> Column:
-        return _unq12(F.sum(_q12(col)))
 
     # live half-step checkpoints, oldest first. Half-step t is read
     # only by half-step t+1, so once checkpoint t+2 exists, t is dead
-    # and its blocks are released (checkpoint blocks are NOT reclaimed
-    # by the ContextCleaner — r06 VERDICT leak fix): at most three
-    # sets are live at once, whatever n_iters. The final hubs/auths
-    # leaves stay alive under the returned lazy frame.
+    # and its blocks are released: at most three sets are live at
+    # once, whatever n_iters. The final hubs/auths leaves stay alive
+    # under the returned lazy frame.
     ckpts: list[DataFrame] = []
 
-    def normalize(scores: DataFrame, col: str) -> DataFrame:
-        # r15 shape: eagerly checkpoint the RAW half-step scores (one
-        # node-sized materialization that also truncates lineage to a
-        # leaf — the plan would otherwise double per half-step and
-        # Catalyst analysis goes exponential past a handful of
-        # iterations), then divide LAZILY by the 1-scalar L1
-        # normalizer as a literal. The pre-r15 form ran the normalizer
-        # aggregate as a broadcast build and then re-read + re-wrote
-        # the whole frame into a SECOND materialization (the
-        # normalized checkpoint); dividing on read costs one multiply
-        # per consumer row instead of a full extra pass. A/B at sf0.1
-        # (q140): 4.70/5.02 -> 4.01/4.23 min/median. The normalizer is
-        # observed on the checkpoint's own job rather than collected
-        # by a separate aggregate (two more jobs per half-step): the
-        # same exact decimal sum, so the result is bit-identical.
+    def half_step(
+        scores: DataFrame, x: str, frm: str, to: str, y: str
+    ) -> DataFrame:
+        """One half-step: ``y`` at each ``to`` end is the exact sum
+        of ``x`` over its edges' ``frm`` ends, then L1 normalized.
+
+        r15 shape: eagerly checkpoint the RAW half-step scores (one
+        node-sized materialization that also truncates lineage to a
+        leaf — the plan would otherwise double per half-step and
+        Catalyst analysis goes exponential past a handful of
+        iterations), then divide LAZILY by the 1-scalar L1 normalizer
+        as a literal. The pre-r15 form ran the normalizer aggregate as
+        a broadcast build and then re-read + re-wrote the whole frame
+        into a SECOND materialization (the normalized checkpoint);
+        dividing on read costs one multiply per consumer row instead
+        of a full extra pass. A/B at sf0.1 (q140): 4.70/5.02 ->
+        4.01/4.23 min/median. The normalizer is observed on the
+        checkpoint's own job rather than collected by a separate
+        aggregate (two more jobs per half-step): the same exact
+        decimal sum, so the result is bit-identical."""
+        raw = (
+            e.join(scores, F.expr(f"{frm} = _v"))
+            .groupBy(to)
+            .agg(F.expr(f"{_dsum_sql(x)} AS {y}"))
+        )
         total = Observation()
-        ckpt = scores.observe(
-            total, dsum(F.col(col)).alias("_t")
-        ).localCheckpoint(eager=True)
+        ckpt = (
+            base.join(raw, F.expr(f"_v = {to}"), "left")
+            .selectExpr("_v", f"coalesce({y}, 0.0D) AS {y}")
+            .observe(total, F.expr(f"{_dsum_sql(y)} AS _t"))
+            .localCheckpoint(eager=True)
+        )
         ckpts.append(ckpt)
         if len(ckpts) > 2:
             _release_frame(ckpts.pop(0))
@@ -785,43 +740,20 @@ def hits_scores(
         # 0 (or NULL on an empty node set) — keep the scores 0.0
         # instead of NaN-poisoning every node
         if t:
-            return ckpt.select(
-                "_v", (F.col(col) / F.lit(float(t))).alias(col)
-            )
-        return ckpt.select("_v", F.lit(0.0).alias(col))
+            return ckpt.selectExpr("_v", f"{y} / {double_sql(t)} AS {y}")
+        return ckpt.selectExpr("_v", f"0.0D AS {y}")
 
-    hubs = base.select("_v", F.lit(1.0).alias("h"))
+    hubs = base.selectExpr("_v", "1.0D AS h")
     auths = None
-    for t in range(n_iters):
-        raw_a = (
-            e.join(hubs, e["_src"] == hubs["_v"])
-            .groupBy("_dst")
-            .agg(dsum(F.col("h")).alias("a"))
-        )
-        auths = normalize(
-            base.join(raw_a, base["_v"] == raw_a["_dst"], "left")
-            .select("_v", F.coalesce("a", F.lit(0.0)).alias("a")),
-            "a",
-        )
-        raw_h = (
-            e.join(auths, e["_dst"] == auths["_v"])
-            .groupBy("_src")
-            .agg(dsum(F.col("a")).alias("h"))
-        )
-        hubs = normalize(
-            base.join(raw_h, base["_v"] == raw_h["_src"], "left")
-            .select("_v", F.coalesce("h", F.lit(0.0)).alias("h")),
-            "h",
-        )
+    for _ in range(n_iters):
+        auths = half_step(hubs, "h", "_src", "_dst", "a")
+        hubs = half_step(auths, "a", "_dst", "_src", "h")
     # the returned frame reads only the two final leaves, so e is dead
     e.unpersist()
-    return (
-        hubs.join(auths, "_v")
-        .select(
-            F.col("_v").alias(node_col),
-            _round8(F.col("h")).alias("hub"),
-            _round8(F.col("a")).alias("authority"),
-        )
+    return hubs.join(auths, "_v").selectExpr(
+        f"_v AS `{node_col}`",
+        f"{_round8_sql('h')} AS hub",
+        f"{_round8_sql('a')} AS authority",
     )
 
 
@@ -954,7 +886,8 @@ def kcore_peel(
     100 TB shape: per round, one degree aggregation keyed by vertex +
     two semi-joins restricting the edge list — all key-equality
     shuffles, no driver round-trips, lineage bounded by the fixed
-    round count; superseded edge frames are released eagerly. The
+    round count; the per-round edge and survivor frames are released
+    together once the n_rounds+1-row result is collected. The
     reference engine has no graph surface (SURVEY §2 extension)."""
     e = (
         edges.select(
@@ -998,11 +931,8 @@ def kcore_peel(
             F.col("_b") == F.col("_v2"),
             "semi",
         )
-        # every _TRUNCATE_EVERY-th round the surviving edge frame is
-        # checkpointed instead of plain-persisted, cutting the
-        # round-over-round lineage chain (all held frames, either
-        # tier, are released together after the result materializes)
-        if r % _TRUNCATE_EVERY == 0:
+        # a truncation round checkpoints instead (lineage cut)
+        if _truncates(r):
             nxt = nxt.localCheckpoint(eager=True)
         else:
             nxt = nxt.persist()
@@ -1020,18 +950,7 @@ def kcore_peel(
     out = rows[0]
     for frame in rows[1:]:
         out = out.unionByName(frame)
-    # the result is n_rounds+1 rows: pin it as a driver-local literal
-    # BEFORE releasing the held frames — a plain persist() would keep
-    # a recompute path through the freed checkpoint blocks (LRU
-    # eviction then fails with CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND
-    # instead of recomputing), while a collected literal has no
-    # lineage at all
-    result = edges.sparkSession.createDataFrame(
-        out.collect(), schema=out.schema
-    )
-    for frame_df in held:
-        _release_frame(frame_df)
-    return result
+    return _collect_then_release(out, *held)
 
 
 def bfs_hops(
@@ -1066,27 +985,27 @@ def bfs_hops(
     aggregate. The edge frame checkpoints too: an expensive upstream
     (a kNN-graph build) would otherwise re-run per round — invisible
     to live-plan audits because the result is collected (caught by
-    the q255 10x scale probe). All checkpoint blocks are released
-    before returning (the result is a collected literal, so nothing
-    rides the truncated lineage).
+    the q255 10x scale probe). The seeds x hops histogram is collected
+    and then every checkpoint is released (``_collect_then_release``).
+    Round expressions cross to the JVM as SQL text.
 
     Output: (seed_id, hop, n_nodes) with hop 0 = the seed itself.
     """
-    e = edges.select(
-        F.col(edges.columns[0]).cast("long").alias("_s"),
-        F.col(edges.columns[1]).cast("long").alias("_d"),
+    src, dst = edges.columns[:2]
+    e = edges.selectExpr(
+        f"CAST(`{src}` AS BIGINT) AS _s", f"CAST(`{dst}` AS BIGINT) AS _d"
     ).localCheckpoint()
-    visited = seeds.select(
-        F.col(node_col).cast("long").alias("_seed"),
-        F.col(node_col).cast("long").alias("_node"),
-        F.lit(0).cast("long").alias("_hop"),
+    visited = seeds.selectExpr(
+        f"CAST(`{node_col}` AS BIGINT) AS _seed",
+        f"CAST(`{node_col}` AS BIGINT) AS _node",
+        "CAST(0 AS BIGINT) AS _hop",
     ).localCheckpoint()
     held: list[DataFrame] = [visited, e]
     frontier = visited.select("_seed", "_node")
     for t in range(1, max_hops + 1):
         nxt = (
-            frontier.join(e, frontier["_node"] == e["_s"])
-            .select("_seed", F.col("_d").alias("_node"))
+            frontier.join(e, F.expr("_node = _s"))
+            .selectExpr("_seed", "_d AS _node")
             .distinct()
         )
         # eager checkpoint: materialized here, so the visited union
@@ -1096,8 +1015,8 @@ def bfs_hops(
         reached = Observation()
         new = (
             nxt.join(visited, ["_seed", "_node"], "left_anti")
-            .withColumn("_hop", F.lit(t).cast("long"))
-            .observe(reached, F.count(F.lit(1)).alias("n"))
+            .selectExpr("_seed", "_node", f"CAST({t} AS BIGINT) AS _hop")
+            .observe(reached, F.expr("count(1) AS n"))
             .localCheckpoint()
         )
         if reached.get["n"] == 0:
@@ -1107,14 +1026,6 @@ def bfs_hops(
         visited = visited.unionByName(new)
         frontier = new.select("_seed", "_node")
     out = visited.groupBy(
-        F.col("_seed").alias("seed_id"), F.col("_hop").alias("hop")
-    ).agg(F.count("*").cast("long").alias("n_nodes"))
-    # the histogram is seeds x hops — collect it into a literal frame
-    # so the per-round caches can be released immediately (the
-    # kcore_peel pattern: no consumer left on the iterative lineage)
-    result = edges.sparkSession.createDataFrame(
-        out.orderBy("seed_id", "hop").collect(), schema=out.schema
-    )
-    for frame_df in held:
-        _release_frame(frame_df)
-    return result
+        F.expr("_seed AS seed_id"), F.expr("_hop AS hop")
+    ).agg(F.expr("CAST(count(*) AS BIGINT) AS n_nodes"))
+    return _collect_then_release(out.orderBy("seed_id", "hop"), *held)

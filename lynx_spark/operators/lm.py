@@ -46,6 +46,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from lynx_spark.operators._util import (
+    _finalize_iterative,
+    _release_frame,
+    _truncate_round,
+    ensure_parallelism,
+)
 from lynx_spark.operators._util import words_col as _words
 
 #: add-k smoothing for the DSIR models — keeps words absent from the
@@ -798,22 +804,14 @@ def _bpe_learn(
     tokens = sum(pair_count) + total_word_count exactly (1-symbol
     words contribute c*1 through the word-count term). All sums stay
     BIGINT — bit-identical to the per-frame token aggregation it
-    replaces. The replace chain re-materializes (eager
-    localCheckpoint) every _TRUNCATE_EVERY merges — the graph-loop
-    lineage discipline — so recompute depth and plan size stay
+    replaces. The replace chain re-materializes through the shared
+    ``_truncate_round`` cadence, so recompute depth and plan size stay
     bounded at any n_merges."""
-    from lynx_spark.operators.graph import (
-        _TRUNCATE_EVERY,
-        _release_frame,
-    )
-
     sep = r"\.\."
     # r14: the one corpus pass (word counts) splits/filters every
     # document in the scan stage — spread it when the input arrives
     # under-partitioned (guide §2.5; a single small parquet file is
     # one scan task otherwise)
-    from lynx_spark.operators._util import ensure_parallelism
-
     wc = (
         ensure_parallelism(df)
         .select(F.explode(_words(text_col)).alias("word"))
@@ -859,14 +857,9 @@ def _bpe_learn(
                 ).alias("s"),
             )
             # cadence counts APPLIED merges: the rewrite at merge t
-            # applies pick t-1, so (t-1) % N == 0 truncates after
-            # every N applied replaces — intentionally offset from
-            # _truncate_round's round_no % N convention (ADVICE r14)
-            if (t - 1) % _TRUNCATE_EVERY == 0:
-                new_ckpt = cur.localCheckpoint(eager=True)
-                _release_frame(ckpt)  # sole consumer materialized
-                cur = new_ckpt
-                ckpt = new_ckpt
+            # applies pick t-1, so round t-1 truncates after every N
+            # applied replaces (ADVICE r14)
+            cur, ckpt = _truncate_round(cur, t - 1, ckpt)
         base = cur.select("c", F.split("s", sep).alias("a")).filter(
             F.size("a") >= 4  # at least two symbols -> has a pair
         )
@@ -929,9 +922,7 @@ def _bpe_learn(
                 F.lit(f".{lhs}{rhs}."),
             ).alias("s"),
         )
-    final_vocab = cur.localCheckpoint(eager=True)
-    if ckpt is not final_vocab:
-        _release_frame(ckpt)
+    final_vocab = _finalize_iterative(cur, ckpt)
     if track_sizes and picks:
         final_tokens = final_vocab.agg(
             F.sum(F.col("c") * (F.size(F.split("s", sep)) - 2))
@@ -960,8 +951,6 @@ def bpe_train(
     the merge table is MODEL-sized (n_merges rows of collected
     scalars), so it returns as a literal frame — the kcore_peel /
     bfs_hops convention for iteration summaries."""
-    from lynx_spark.operators.graph import _release_frame
-
     rows, vocab = _bpe_learn(df, text_col, n_merges, track_sizes=True)
     _release_frame(vocab)  # per-merge token stats already collected
     return df.sparkSession.createDataFrame(

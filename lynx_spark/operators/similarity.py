@@ -45,6 +45,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lynx_spark.operators._util import (
+    _collect_then_release,
+    _release_frame,
     banded_self_pairs,
     double_array_sql,
     ensure_parallelism,
@@ -1660,9 +1662,8 @@ def kcenter_sample(
     iterations is ONE broadcast of the single new center and one
     linear scan updating the running min-distance column (no
     pairwise blowup, no per-iteration shuffle); superseded state
-    frames are released each round (the graph-loop discipline), so
-    memory stays bounded at any k."""
-    from lynx_spark.operators.graph import _release_frame
+    frames are released each round and the k picks return as a
+    collected literal, so memory stays bounded at any k."""
 
     def q8(col: Column) -> Column:
         return F.floor(col * F.lit(1e8) + F.lit(0.5)) / F.lit(1e8)
@@ -1674,6 +1675,7 @@ def kcenter_sample(
     seed = (
         v.orderBy("vec_id").limit(1).localCheckpoint(eager=True)
     )
+    held = [seed]
     picks = [
         seed.select(
             F.lit(1).cast("long").alias("sel_rank"),
@@ -1699,6 +1701,7 @@ def kcenter_sample(
             .limit(1)
             .localCheckpoint(eager=True)
         )
+        held.append(nxt)
         picks.append(
             nxt.select(
                 F.lit(t).cast("long").alias("sel_rank"),
@@ -1729,7 +1732,7 @@ def kcenter_sample(
     out = picks[0]
     for p in picks[1:]:
         out = out.unionByName(p)
-    return out
+    return _collect_then_release(out, *held)
 
 
 def embedding_split_leakage(

@@ -7385,9 +7385,10 @@ sym{r} AS MATERIALIZED (SELECT sy.a, sy.b FROM sym{p} sy
     "the same part, with a fan-out cap (parts carried by <= 8 "
     "suppliers) playing the df-cap role so no hub part can go "
     "quadratic. Per-round survivor/edge trajectory; each round is "
-    "one degree aggregation + two semi-joins, superseded edge "
-    "frames released eagerly (the HITS bookkeeping pattern) — the "
-    "graph-density pruning tier for corpus graphs at 100 TB",
+    "one degree aggregation + two semi-joins, and the per-round "
+    "frames are released together once the 4-row result is "
+    "collected — the graph-density pruning tier for corpus graphs "
+    "at 100 TB",
 )
 def q164(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = (
@@ -15708,10 +15709,10 @@ FROM mh GROUP BY seed, hop ORDER BY seed_id, hop
     "iterates on the frontier SET). Per hop ONE frontier-keyed "
     "shuffle join + DISTINCT + an anti-join against the visited set "
     "(first-visit = min hop, so set semantics replace all "
-    "arithmetic); one pass covers all seeds; per-round frames "
-    "persist-and-release eagerly (graph.py lifecycle), and the "
-    "seeds x hops histogram collapses to a literal frame so no "
-    "consumer rides the iterative lineage",
+    "arithmetic); one pass covers all seeds; per-round frames are "
+    "checkpointed, the seeds x hops histogram collapses to a "
+    "literal frame, and only then are the checkpoints released, so "
+    "no consumer rides the iterative lineage",
 )
 def q255(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = T(spark, sf_dir, "embeddings")

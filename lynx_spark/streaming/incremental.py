@@ -77,7 +77,7 @@ _COMMITS = "_commits"
 #: histogram promoted across micro-batches gains one union+agg plan
 #: layer per batch; every _HIST_TRUNCATE-th batch promotes the
 #: parquet-backed frame instead, resetting the plan to a file leaf
-#: (the graph loop's _TRUNCATE_EVERY discipline). Module-level so
+#: (the iterative operators' _TRUNCATE_EVERY discipline). Module-level so
 #: tests can force the truncation regime.
 _HIST_TRUNCATE = 8
 
@@ -1031,8 +1031,8 @@ def percentile_stream(
         # batches the promotion hands over the PARQUET-backed frame
         # instead: the in-memory chain's lineage otherwise grows one
         # union+agg layer per batch (an unbounded-analysis /
-        # recompute-on-eviction hazard on long streams — the graph
-        # loop's _TRUNCATE_EVERY discipline), and the lazy file read
+        # recompute-on-eviction hazard on long streams — the iterative
+        # operators' _TRUNCATE_EVERY discipline), and the lazy file read
         # costs nothing now while resetting the plan to a leaf.
         prev, bh = _carried["hist"], _carried["merged"]
         if (batch_id + 1) % _HIST_TRUNCATE == 0:

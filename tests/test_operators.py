@@ -3339,6 +3339,26 @@ def test_kcenter_matches_sequential_greedy(spark):
     assert rep == got
 
 
+def test_kcenter_releases_its_checkpoints(spark):
+    """The k picks come back as a collected literal, and the seed and
+    per-pick checkpoints are released before the call returns: the
+    persistent-RDD count is back where it started while the result is
+    still alive (a lazy union over the picks kept all k of them)."""
+    import math
+
+    from lynx_spark.operators.similarity import kcenter_sample
+
+    df = spark.createDataFrame(
+        [(i, [math.sin(0.29 * i + d) for d in range(4)]) for i in range(30)],
+        ["vec_id", "embedding"],
+    )
+    rdds = spark.sparkContext._jsc.getPersistentRDDs
+    before = rdds().size()
+    out = kcenter_sample(df, "vec_id", "embedding", k=6)
+    assert len(out.collect()) == 6
+    assert rdds().size() == before
+
+
 def test_directed_modularity_hand_graph(spark):
     """Two perfectly-separated communities -> each contributes
     w_cc/W - (w_c/W)^2 with w_cc = w_c; a merged single community

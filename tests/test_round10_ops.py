@@ -198,28 +198,46 @@ def test_iterative_truncation_bit_identical(spark, monkeypatch):
     """r10 lineage guard: checkpointing every 5th round is a plan
     transformation only — pagerank / label propagation / k-core rows
     are identical with truncation active (7 rounds crosses the
-    5-round boundary) and disabled."""
+    5-round boundary) and disabled. Each operator's localCheckpoint
+    calls are counted per regime, so a patch that stops reaching the
+    cadence (the constant living elsewhere) fails here instead of
+    comparing two identical untruncated runs."""
     import lynx_spark.operators.graph as gr
 
     edges, nodes = _toy_graph(spark)
-    with_tr = {
-        "pr": sorted(map(tuple, gr.pagerank(edges, nodes, n_iters=7).collect())),
-        "lp": sorted(map(tuple, gr.label_propagation(
+    calls = [0]
+    frame_cls = type(edges)  # the concrete (classic) DataFrame class
+    real = frame_cls.localCheckpoint
+
+    def counting(self, *args, **kwargs):
+        calls[0] += 1
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", counting)
+    runs = {
+        "pr": lambda: gr.pagerank(edges, nodes, n_iters=7),
+        "lp": lambda: gr.label_propagation(
             edges, nodes, "vec_id", "label",
-            F.col("vec_id") < 3, n_rounds=7).collect())),
-        "kc": sorted(map(tuple, gr.kcore_peel(
-            edges.select("src", "nbr"), k=3, n_rounds=7).collect())),
+            F.col("vec_id") < 3, n_rounds=7),
+        "kc": lambda: gr.kcore_peel(
+            edges.select("src", "nbr"), k=3, n_rounds=7),
     }
-    monkeypatch.setattr(gr, "_TRUNCATE_EVERY", 10_000)
-    without = {
-        "pr": sorted(map(tuple, gr.pagerank(edges, nodes, n_iters=7).collect())),
-        "lp": sorted(map(tuple, gr.label_propagation(
-            edges, nodes, "vec_id", "label",
-            F.col("vec_id") < 3, n_rounds=7).collect())),
-        "kc": sorted(map(tuple, gr.kcore_peel(
-            edges.select("src", "nbr"), k=3, n_rounds=7).collect())),
-    }
-    assert with_tr == without
+
+    def regime():
+        out = {}
+        for name, run in runs.items():
+            calls[0] = 0
+            rows = sorted(map(tuple, run().collect()))
+            out[name] = (rows, calls[0])
+        return out
+
+    with_tr = regime()
+    monkeypatch.setattr(_util, "_TRUNCATE_EVERY", 10_000)
+    without = regime()
+    for name in runs:
+        assert with_tr[name][0] == without[name][0], name
+        assert with_tr[name][1] > without[name][1], (
+            name, with_tr[name][1], without[name][1])
 
 
 def test_iterative_lineage_bounded_after_25_rounds(spark):
